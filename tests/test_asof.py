@@ -348,12 +348,22 @@ def test_asof_map_payload_supported(spark, strategy):
     assert out[0]["f__feature_time"] == datetime(2024, 1, 7)
 
 
-@pytest.mark.parametrize("strict", [True, False])
-def test_pit_match_multi_equals_per_feature(spark, strict):
+@pytest.mark.parametrize(
+    "strict,bucket_s",
+    [
+        pytest.param(True, None, id="True"),
+        pytest.param(False, None, id="False"),
+        pytest.param(True, 5 * DAY, id="True-bucketed"),
+        pytest.param(False, 5 * DAY, id="False-bucketed"),
+    ],
+)
+def test_pit_match_multi_equals_per_feature(spark, strict, bucket_s):
     """The single-pass multi-feature plan must agree exactly with N
-    independent pit_match calls — including MIXED per-feature embargos
-    (multi applies the embargo on the feature side, ft + e < lt; the
-    per-feature plan shifts the label side, ft < lt - e)."""
+    independent range-join pit_match calls — an independent kernel —
+    including MIXED per-feature embargos (multi applies the embargo on the
+    feature side, ft + e < lt; the range join shifts the label side,
+    ft < lt - e) and, with ``bucket_s``, the per-feature cross-bucket
+    carry."""
     import random
     from datetime import datetime, timedelta
 
@@ -401,6 +411,7 @@ def test_pit_match_multi_equals_per_feature(spark, strict):
         label_time="label_time",
         lookback_s=lookback,
         strict=strict,
+        bucket_s=bucket_s,
     )
     expected = labels.select(ROW_ID)
     for fi in range(3):
@@ -414,9 +425,54 @@ def test_pit_match_multi_equals_per_feature(spark, strict):
             embargo_s=embargos[fi],
             lookback_s=lookback,
             strict=strict,
+            strategy="join",
         )
         expected = expected.join(m, ROW_ID, "left")
 
     got = sorted(tuple(r) for r in multi.collect())
     exp = sorted(tuple(r) for r in expected.select(*multi.columns).collect())
     assert got == exp
+
+
+def test_bucketed_dup_flags_share_the_window(spark):
+    """With ``bucket_s`` the in-window duplicate flags must partition by the
+    same (key, bucket) columns as the running frame: flagging adds no
+    Window and no Exchange over the bucketed plan (whose carry prefix scan
+    is its one extra Window), and planted duplicate groups are counted."""
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import Observation
+
+    from timefence_spark.operators.asof import ROW_ID, pit_match_multi
+    from timefence_spark.plans import physical_summary
+
+    t0 = datetime(2024, 1, 1)
+    labels = spark.createDataFrame(
+        [(i % 10, t0 + timedelta(hours=i)) for i in range(100)],
+        "entity long, label_time timestamp_ntz",
+    ).withColumn(ROW_ID, F.monotonically_increasing_id())
+    rows = [(i % 10, t0 + timedelta(hours=i - 2), float(i)) for i in range(100)]
+    feat = spark.createDataFrame(
+        rows + [(r[0], r[1], r[2] + 0.5) for r in rows[:3]],
+        "entity long, feature_time timestamp_ntz, v double",
+    )
+    kwargs = dict(
+        key_pairs=[("entity", "entity")],
+        label_time="label_time",
+        lookback_s=365 * DAY,
+        bucket_s=DAY,
+    )
+    specs = [("f", feat, "feature_time", ["v"], 3600)]
+    plain = pit_match_multi(labels, specs, **kwargs)
+    obs = Observation()
+    flagged = pit_match_multi(
+        labels, specs, dup_track=[True], dup_observation=obs, **kwargs
+    )
+    s_plain = physical_summary(plain)
+    s_flagged = physical_summary(flagged)
+    assert (s_flagged.windows, s_flagged.exchanges) == (
+        s_plain.windows,
+        s_plain.exchanges,
+    ), f"dup flags split the window: {s_plain} -> {s_flagged}"
+    flagged.count()
+    assert int(obs.get["dups_0"]) == 3

@@ -176,6 +176,17 @@ def test_param_validation(spark, users_feat_labels):
         tf.build(_labels(labels_path), [feat], max_staleness="5d", spark=spark)
 
 
+def test_unknown_strategy_rejected_before_spark_work(spark, tmp_path, users_feat_labels):
+    """An unknown as-of strategy is a config error raised before any Spark
+    work: the labels path does not exist, so touching it would raise a
+    different error, and explain() never reports the bogus name as a plan."""
+    users_path, _, _ = users_feat_labels
+    missing = _labels(str(tmp_path / "no_such_labels.parquet"))
+    for verb in (tf.build, tf.explain):
+        with pytest.raises(TimefenceConfigError, match="strategy must be"):
+            verb(missing, [_country_feature(users_path)], strategy="bogus", spark=spark)
+
+
 def test_duplicate_feature_names(spark, users_feat_labels):
     users_path, _, labels_path = users_feat_labels
     f1 = _country_feature(users_path)
@@ -312,15 +323,28 @@ def test_duplicate_detection_error_and_keep_any(spark, tmp_path):
     feat_err = tf.Feature(
         tf.Source(p, keys="user_id", timestamp="ts"), columns="v", name="f"
     )
-    with pytest.raises(TimefenceDuplicateError):
-        tf.build(labels, [feat_err], spark=spark)
-    # With an output path the in-window duplicate count lands with the
-    # write action (round 13); the error must still abort the build AND
-    # remove the output.
-    out = tmp_path / "dup_out.parquet"
-    with pytest.raises(TimefenceDuplicateError):
-        tf.build(labels, [feat_err], str(out), spark=spark)
-    assert not out.exists()
+    feat_ok = tf.Feature(
+        tf.Source(p, keys="user_id", timestamp="ts"),
+        columns="v",
+        name="f",
+        on_duplicate="keep_any",
+    )
+    # Skew-bucketed builds count duplicates in the same window pass.
+    for skew_bucket in (None, "30d"):
+        with pytest.raises(TimefenceDuplicateError):
+            tf.build(labels, [feat_err], spark=spark, skew_bucket=skew_bucket)
+        # With an output path the in-window duplicate count lands with the
+        # write action (round 13); the error must still abort the build AND
+        # remove the output.
+        out = tmp_path / f"dup_out_{skew_bucket}.parquet"
+        with pytest.raises(TimefenceDuplicateError):
+            tf.build(labels, [feat_err], str(out), spark=spark, skew_bucket=skew_bucket)
+        assert not out.exists()
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            res = tf.build(labels, [feat_ok], spark=spark, skew_bucket=skew_bucket)
+        # keep_any resolves the tie deterministically: max payload wins.
+        assert [r["f__v"] for r in res.dataframe.collect()] == [2.0]
 
 
 def test_duplicate_detection_null_key_rows(spark, tmp_path):
@@ -823,6 +847,8 @@ def test_build_skew_bucket_matches_plain_union(spark, tmp_path, users_feat_label
         spark=spark,
     )
     assert bucketed.validate()
+    # Single key mapping: bucketing keeps the zero-join plan.
+    assert "-- recombine: none" in bucketed.sql
     a = sorted(
         tuple(r) for r in spark.read.parquet(str(tmp_path / "plain.parquet")).collect()
     )

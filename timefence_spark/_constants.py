@@ -13,7 +13,6 @@ DEFAULT_RTOL: float = 1e-7
 DEFAULT_MAX_LOOKBACK: str = "365d"
 DEFAULT_MAX_LOOKBACK_DAYS: int = 365
 
-DEFAULT_JOIN_MODE: str = "strict"
 DEFAULT_ON_MISSING: str = "null"
 
 # Severity classification thresholds (reference _constants.py:16-19)
@@ -26,14 +25,7 @@ DEFAULT_STORE_PATH: str = ".timefence_spark"
 
 CACHE_KEY_LENGTH: int = 16
 
-# Spark-specific tuning knobs (no reference equivalent — scale-path config).
-# Feature tables smaller than this (estimated bytes) are broadcast in the
-# PIT join instead of shuffled.
-BROADCAST_THRESHOLD_BYTES: int = 256 * 1024 * 1024
-# Above this many estimated candidate rows per label the engine prefers the
-# union/last_value as-of formulation (no join fanout) over join+max_by.
-DEFAULT_ASOF_STRATEGY: str = "auto"
-
+# Spark-specific tuning knob (no reference equivalent — scale-path config).
 # Cap on features resolved in ONE union/window pass (pit_match_multi). The
 # single-pass plan's union row width, window expression count, and sort-key
 # list all grow linearly with the features in the group; past ~a dozen the

@@ -7,8 +7,8 @@ plan so Catalyst handles predicate pushdown, column pruning, join selection
 and AQE does runtime re-planning. The only physical decisions the engine owns
 are the ones Spark cannot infer:
 
-* as-of strategy per feature (broadcast range-join for small feature tables,
-  no-fanout union/last_value plan for big ones) — see operators/asof.py;
+* as-of strategy (the no-fanout union/last_value plan by default; an opt-in
+  range join that broadcasts small feature tables) — see operators/asof.py;
 * a single localCheckpoint() of the label spine (pins the nondeterministic
   row id against recomputation — eviction-proof, unlike a cache) and a
   persist() of the final result (one materialization serving write + count
@@ -70,6 +70,7 @@ from timefence_spark.operators.asof import (
     _payload_orderable,
     pit_match,
     pit_match_multi,
+    resolve_strategy,
 )
 from timefence_spark.results import (
     AuditReport,
@@ -91,9 +92,6 @@ from timefence_spark.sources.readers import (
 logger = logging.getLogger(__name__)
 
 __version__ = "0.1.0"
-
-# Feature tables at or below this row count are broadcast in the PIT join.
-DEFAULT_BROADCAST_MAX_ROWS = 5_000_000
 
 
 # ---------------------------------------------------------------------------
@@ -307,11 +305,10 @@ def _validate_timezones(
 
 
 def _dup_check_agg(src_df: DataFrame, feature: Feature) -> DataFrame:
-    """(n_rows, dup_pairs) aggregation for one source — one shuffle, lazy."""
+    """Duplicate-(key, ts) group count for one source — one shuffle, lazy."""
     key_ts = [*feature.source_keys, feature.source.timestamp]
     grouped = src_df.groupBy(*key_ts).agg(F.count(F.lit(1)).alias("cnt"))
     return grouped.agg(
-        F.sum("cnt").alias("n_rows"),
         F.count(F.when(F.col("cnt") > 1, F.lit(1))).alias("dup_pairs"),
     )
 
@@ -378,7 +375,7 @@ def _null_subset(src_df: DataFrame, feat: Feature) -> DataFrame:
 def _batch_duplicate_checks(
     checks: list[tuple[str, DataFrame, Feature]],
     null_subset_checks: list[tuple[str, DataFrame, Feature]] = (),
-) -> tuple[dict[str, int], dict[str, int]]:
+) -> dict[str, int]:
     """Run every source's duplicate check as ONE Spark action.
 
     A 10-feature build used to pay 10 sequential aggregation jobs here
@@ -393,12 +390,12 @@ def _batch_duplicate_checks(
     dup_track); only their NULL-key/NULL-time rows — which that pass
     cannot see — are aggregated here, and their policy is applied later
     by the engine once the window metrics land. Returns
-    ({source_name: row_count}, {tag: null_subset_dup_pairs})."""
+    {tag: null_subset_dup_pairs}."""
     from functools import reduce
 
     branches = [
         _dup_check_agg(src_df, feat).select(
-            F.lit(tag).alias("tag"), "n_rows", "dup_pairs"
+            F.lit(tag).alias("tag"), "dup_pairs"
         )
         for tag, src_df, feat in checks
     ]
@@ -430,24 +427,17 @@ def _batch_duplicate_checks(
         )
         branches.append(
             grouped.groupBy("tag").agg(
-                F.sum("cnt").alias("n_rows"),
                 F.count(F.when(F.col("cnt") > 1, F.lit(1))).alias("dup_pairs"),
             )
         )
     if not branches:
-        return {}, {}
+        return {}
     rows = reduce(lambda a, b: a.unionByName(b), branches).collect()
-    stats = {r["tag"]: (int(r["n_rows"] or 0), int(r["dup_pairs"] or 0)) for r in rows}
-    counts: dict[str, int] = {}
+    dup_pairs = {r["tag"]: int(r["dup_pairs"] or 0) for r in rows}
     for tag, src_df, feat in checks:
-        n_rows, dup_pairs = stats[tag]
-        counts[feat.source.name] = n_rows
-        _apply_dup_policy(src_df, feat, dup_pairs)
+        _apply_dup_policy(src_df, feat, dup_pairs[tag])
     # A source with zero NULL rows contributes no group row at all.
-    null_dups = {
-        tag: stats.get(tag, (0, 0))[1] for tag, _, _ in null_subset_checks
-    }
-    return counts, null_dups
+    return {tag: dup_pairs.get(tag, 0) for tag, _, _ in null_subset_checks}
 
 
 def _validate_splits(
@@ -651,7 +641,6 @@ def build(
     progress: Callable[[str], None] | None = None,
     spark: SparkSession | None = None,
     strategy: str = "auto",
-    broadcast_max_rows: int = DEFAULT_BROADCAST_MAX_ROWS,
     output_partition_by: str | Sequence[str] | None = None,
     skew_bucket: str | timedelta | None = None,
     checkpoint_dir: str | Path | None = None,
@@ -660,20 +649,21 @@ def build(
 
     Lifecycle parity with reference build() (engine.py:933-1500); Spark
     extras: ``spark`` (session), ``strategy`` ('auto' | 'join' | 'union'
-    as-of plan selection), ``broadcast_max_rows`` (feature tables at or
-    below this size are broadcast), ``output_partition_by`` (write the
-    output as a Hive-partitioned parquet directory keyed by these columns —
-    the 100 TB output path: readers get partition pruning, and no
-    single-file coalesce bottleneck; requires a directory-style ``output``,
-    not a ``.parquet`` file path), ``skew_bucket`` (duration, e.g. "30d":
-    split hot entity keys into time buckets of this width inside the union
-    as-of plan, bounding any single sort partition — see
-    operators/asof._asof_union_single_pass), ``checkpoint_dir`` (pin the
-    spine's row ids to RELIABLE storage instead of executor-local blocks —
-    survives executor loss on long cluster builds; see
-    timefence_spark._checkpoint and docs/concepts/scale.md).
+    as-of plan selection; 'auto' is 'union', and 'join' broadcasts a
+    feature table whose Catalyst size estimate is small),
+    ``output_partition_by`` (write the output as a Hive-partitioned
+    parquet directory keyed by these columns — the 100 TB output path:
+    readers get partition pruning, and no single-file coalesce bottleneck;
+    requires a directory-style ``output``, not a ``.parquet`` file path),
+    ``skew_bucket`` (duration, e.g. "30d": split hot entity keys into time
+    buckets of this width inside the union as-of plan, bounding any single
+    sort partition — see operators/asof.pit_match_multi),
+    ``checkpoint_dir`` (pin the spine's row ids to RELIABLE storage instead
+    of executor-local blocks — survives executor loss on long cluster
+    builds; see timefence_spark._checkpoint and docs/concepts/scale.md).
     """
     start_time = time.time()
+    strategy = resolve_strategy(strategy)
     spark = get_spark(spark)
 
     def _emit(msg: str) -> None:
@@ -789,15 +779,13 @@ def build(
     # case), the label row rides through the single-pass window itself
     # (pit_match_multi carry_left) — no row id, no checkpoint, and no
     # recombination join exist at all, so there is nothing to pin.
-    resolved_strategy = "union" if strategy == "auto" else strategy
     key_mappings = {
         tuple((lk, f.key_mapping.get(lk, lk)) for lk in labels.keys)
         for f in flat_features
     }
     zero_join = (
         bool(flat_features)
-        and resolved_strategy == "union"
-        and skew_bucket_s is None
+        and strategy == "union"
         and len(key_mappings) == 1
         and len(flat_features) <= UNION_GROUP_MAX_FEATURES
     )
@@ -874,7 +862,6 @@ def build(
 
         # ---- Step 2: sources + feature tables --------------------------
         registered_sources: dict[str, DataFrame] = {}
-        source_counts: dict[str, int] = {}
         feature_tables: dict[str, tuple[DataFrame, list[str]]] = {}
         feature_cache_keys: list[str] = []
         feature_cache_status: dict[str, bool] = {}
@@ -895,12 +882,11 @@ def build(
         # (pit_match_multi dup_track): designated feature name ->
         # (null-subset tag, source df, feature). Eligibility = the
         # feature provably routes through pit_match_multi (build-level
-        # union strategy, no skew bucketing) as a row-preserving
-        # projection of its source (columns mode) with an orderable
-        # payload (the in-window adjacency argument needs the payload
-        # tie-break columns in the sort), and no store is attached
-        # (feature-cache writes must keep the classic check-then-
-        # materialize ordering).
+        # union strategy) as a row-preserving projection of its source
+        # (columns mode) with an orderable payload (the in-window
+        # adjacency argument needs the payload tie-break columns in the
+        # sort), and no store is attached (feature-cache writes must keep
+        # the classic check-then-materialize ordering).
         window_dup_feats: dict[str, tuple[str, DataFrame, Feature]] = {}
         null_dup_results: dict[str, int] = {}
         for feat in flat_features:
@@ -914,8 +900,7 @@ def build(
                 src_df = registered_sources[src_name]
                 in_window = (
                     store is None
-                    and skew_bucket_s is None
-                    and resolved_strategy == "union"
+                    and strategy == "union"
                     and feat.mode == "columns"
                     and _payload_orderable(src_df, list(feat._columns))
                 )
@@ -934,8 +919,8 @@ def build(
         # 100K-label scale, and nothing before the first materialization
         # needs its result. _resolve_dup_checks() joins the thread — and
         # raises any TimefenceDuplicateError — before any side effect
-        # (feature-cache write, broadcast sizing, output write), so the
-        # fail-fast contract is ordering-identical where it matters.
+        # (feature-cache write, output write), so the fail-fast contract
+        # is ordering-identical where it matters.
         dup_future = None
         dup_pool = None
         if pending_checks or null_subset_checks:
@@ -957,9 +942,7 @@ def build(
             if dup_future is not None:
                 fut, dup_future = dup_future, None
                 try:
-                    counts, null_dups = fut.result()
-                    source_counts.update(counts)
-                    null_dup_results.update(null_dups)
+                    null_dup_results.update(fut.result())
                 finally:
                     dup_pool.shutdown(wait=False)
 
@@ -1016,10 +999,9 @@ def build(
         # in ONE union/window pass (pit_match_multi): the spine and every
         # feature table shuffle once by key into a single Window operator,
         # instead of one spine shuffle + window + recombination join per
-        # feature. The join strategy and the skew-bucketed variant keep the
+        # feature (skew buckets included). Only the join strategy keeps the
         # per-feature path.
         matched: dict[str, DataFrame] = {}
-        strategies: dict[str, str] = {}
         physical_plans: dict[str, str] = {}
         # Plan probes (physical_summary → manifest) force a full Catalyst
         # physical planning of each join output — ~0.5-1s of driver time
@@ -1058,22 +1040,8 @@ def build(
         for i, feat in enumerate(flat_features, 1):
             fdf, value_cols = feature_tables[feat.name]
             key_pairs = [(lk, feat.key_mapping.get(lk, lk)) for lk in labels.keys]
-            feat_strategy = strategy
-            if strategy == "auto":
-                # Union is the measured default at every shape (see
-                # operators/asof.pit_match); 'join' remains the explicit
-                # opt-in for extreme key skew.
-                feat_strategy = "union"
-            strategies[feat.name] = feat_strategy
-            if feat_strategy == "join":
-                # Broadcast sizing needs the source row counts — join the
-                # background duplicate-check action for them.
-                _resolve_dup_checks()
-            src_rows = source_counts.get(feat.source.name)
-            small = src_rows is not None and src_rows <= broadcast_max_rows
             transcript.append(
-                f"-- pit_match[{feat.name}] strategy={feat_strategy} "
-                f"broadcast={small and feat_strategy == 'join'} "
+                f"-- pit_match[{feat.name}] strategy={strategy} "
                 f"invariant: feature_time {op} {lt} - {format_duration(feat.embargo)} "
                 f"AND feature_time >= {lt} - {format_duration(max_lookback_td)}"
                 + (
@@ -1082,7 +1050,7 @@ def build(
                     else ""
                 )
             )
-            if feat_strategy == "union" and skew_bucket_s is None:
+            if strategy == "union":
                 union_groups.setdefault(tuple(key_pairs), []).append(feat)
                 continue
             _emit(f"Joining {feat.name} ({i}/{len(flat_features)})")
@@ -1097,9 +1065,7 @@ def build(
                 lookback_s=duration_seconds(max_lookback_td),
                 staleness_s=duration_seconds(max_staleness_td),
                 strict=(join == "strict"),
-                strategy=feat_strategy,
-                broadcast_feature=small and feat_strategy == "join",
-                bucket_s=skew_bucket_s,
+                strategy=strategy,
             )
             _submit_plan_probe([feat.name], matched[feat.name])
 
@@ -1153,6 +1119,7 @@ def build(
                 carry_left=zero_join,
                 dup_track=dup_track if any(dup_track) else None,
                 dup_observation=dup_obs,
+                bucket_s=skew_bucket_s,
             )
             group_outputs.append(gout)
             _submit_plan_probe([feat.name for feat in group_feats], gout)
@@ -1513,7 +1480,7 @@ def build(
                 "matched_rows": fstats.get("matched", 0),
                 "missing_rows": fstats.get("missing", 0),
                 "output_columns": feature_tables[feat.name][1],
-                "strategy": strategies.get(feat.name),
+                "strategy": strategy,
                 "cached": feature_cache_status.get(feat.name, False),
             }
 
@@ -1934,15 +1901,14 @@ def explain(
 ) -> ExplainResult:
     """Preview the join plan without executing it. ``strategy`` mirrors
     build(): the per-feature plan shows the strategy build() would choose."""
-    spark = get_spark(spark)
-    resolved_strategy = "union" if strategy == "auto" else strategy
     strategy_desc = {
         "union": (
             "union-asof (single pass, no fanout; same-key features share "
             "one shuffle + Window via pit_match_multi)"
         ),
         "join": "range join + per-label max (broadcast when feature is small)",
-    }.get(resolved_strategy, resolved_strategy)
+    }[resolve_strategy(strategy)]
+    spark = get_spark(spark)
     max_lookback_td = parse_duration(max_lookback) or timedelta(
         days=DEFAULT_MAX_LOOKBACK_DAYS
     )

@@ -1,8 +1,8 @@
 """Point-in-time (as-of backward) join — the heart of the engine.
 
 Semantics (parity with the reference's two generated-SQL strategies,
-/root/reference/src/timefence/engine.py:762-925): for every label row
-``(keys, label_time)`` pick the single most recent feature row satisfying
+reference engine.py:762-925): for every label row ``(keys, label_time)``
+pick the single most recent feature row satisfying
 
     feature_time  <  label_time - embargo      (strict;  <= inclusive)
     feature_time  >= label_time - max_lookback
@@ -12,37 +12,59 @@ and emit its value columns namespaced ``{prefix}__{col}`` plus a
 ``{prefix}__feature_time`` provenance column; unmatched labels get NULLs
 (left-join semantics).
 
-Spark has no native ASOF join, so two physical strategies are provided —
+Spark has no native ASOF join, so two physical kernels are provided —
 both are pure DataFrame plans (Catalyst/Tungsten execute them; no UDFs):
 
-* ``join``: range-predicate left join on the entity keys followed by a
-  map-side-combinable ``max_by`` per label row. One shuffle of each side by
-  key for the join + one shuffle by row-id for the aggregation. The join
+* ``union`` (:func:`pit_match_multi`): the scalable sort-merge
+  formulation — union label rows and the rows of N feature tables on
+  (key, time), sort inside each key partition, and propagate each
+  feature's latest payload with ``last(..., ignorenulls=True)`` over one
+  running window. No fanout at all: cost is one shuffle of each side by
+  key plus an in-partition sort, independent of window width. This is the
+  plan that survives 100 TB and the ``auto`` default (it also benchmarks
+  faster than the broadcast fanout join at small scale: 0.66s vs 0.96s at
+  sf0.1).
+
+* ``join`` (:func:`_range_join`): range-predicate left join on the entity
+  keys followed by a map-side-combinable ``max`` per label row. The join
   fans out to every candidate inside the lookback window, so keep
-  ``max_lookback`` tight. Small feature sides are broadcast.
+  ``max_lookback`` tight. The feature side is broadcast when its Catalyst
+  size estimate is at most :data:`BROADCAST_BYTES_THRESHOLD`.
 
-* ``union``: the scalable sort-merge formulation — union label rows and
-  feature rows on (key, time), sort inside each key partition, and propagate
-  the latest feature payload with ``last(..., ignorenulls=True)`` over a
-  running window. No fanout at all: cost is one shuffle of each side by key
-  plus an in-partition sort, independent of window width. This is the plan
-  that survives 100 TB and the ``auto`` default (it also benchmarks faster
-  than the broadcast fanout join at small scale: 0.66s vs 0.96s at sf0.1).
-
-Strict-vs-inclusive boundaries are handled order-side in the union strategy:
-at equal timestamps label rows sort before feature rows for strict (the
-feature is invisible) and after them for inclusive.
+:func:`pit_match` (row-id keyed, one feature) and :func:`asof_join`
+(all left columns, one feature) are thin wrappers over these two kernels.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timefence_spark.errors import TimefenceConfigError
+
 ROW_ID = "__label_rowid"
+
+
+def resolve_strategy(strategy: str) -> str:
+    """Validate an as-of ``strategy`` and resolve ``'auto'``.
+
+    Union is the measured default: one shuffle per side + in-partition
+    sort, cost independent of lookback width. The fanout join — even with
+    a broadcast feature side — re-materializes every in-window candidate
+    before the per-label aggregation, and benchmarks slower at every shape
+    tried (sf0.1: 0.66s vs 0.96s single-feature). ``'join'`` remains the
+    explicit opt-in for extreme key skew, where broadcasting the feature
+    side avoids the key-partitioned sort.
+    """
+    if strategy not in ("auto", "union", "join"):
+        raise TimefenceConfigError(
+            f"strategy must be 'auto', 'union' or 'join', got '{strategy}'."
+        )
+    return "union" if strategy == "auto" else strategy
 
 
 def _interval(seconds: int) -> Column:
@@ -106,7 +128,6 @@ def pit_match(
     strict: bool = True,
     row_id: str = ROW_ID,
     strategy: str = "auto",
-    broadcast_feature: bool = False,
     bucket_s: int | None = None,
 ) -> DataFrame:
     """Match each label row to its as-of feature row.
@@ -116,23 +137,13 @@ def pit_match(
     exactly one row per label row. ``bucket_s`` (union strategy only)
     enables skew-hardened time bucketing.
     """
-    if strategy == "auto":
-        # Union is the measured default: one shuffle per side + in-partition
-        # sort, cost independent of lookback width. The fanout join — even
-        # with a broadcast feature side — re-materializes every in-window
-        # candidate before the per-label aggregation, and benchmarks slower
-        # at every shape tried (sf0.1: 0.66s vs 0.96s single-feature). The
-        # join path remains an explicit opt-in for extreme key skew, where
-        # broadcasting the feature side avoids the key-partitioned sort.
-        strategy = "union"
-
-    if strategy == "join":
-        return _pit_match_join(
-            labels,
+    if resolve_strategy(strategy) == "join":
+        return _range_join(
+            labels.select(row_id, *[lk for lk, _ in key_pairs], label_time),
             feature,
             key_pairs=key_pairs,
-            label_time=label_time,
-            feature_time=feature_time,
+            left_time=label_time,
+            right_time=feature_time,
             value_cols=value_cols,
             prefix=prefix,
             embargo_s=embargo_s,
@@ -140,25 +151,18 @@ def pit_match(
             staleness_s=staleness_s,
             strict=strict,
             row_id=row_id,
-            broadcast_feature=broadcast_feature,
         )
-    if strategy == "union":
-        return _pit_match_union(
-            labels,
-            feature,
-            key_pairs=key_pairs,
-            label_time=label_time,
-            feature_time=feature_time,
-            value_cols=value_cols,
-            prefix=prefix,
-            embargo_s=embargo_s,
-            lookback_s=lookback_s,
-            staleness_s=staleness_s,
-            strict=strict,
-            row_id=row_id,
-            bucket_s=bucket_s,
-        )
-    raise ValueError(f"Unknown as-of strategy '{strategy}' (auto|join|union).")
+    return pit_match_multi(
+        labels,
+        [(prefix, feature, feature_time, value_cols, embargo_s)],
+        key_pairs=key_pairs,
+        label_time=label_time,
+        lookback_s=lookback_s,
+        staleness_s=staleness_s,
+        strict=strict,
+        row_id=row_id,
+        bucket_s=bucket_s,
+    )
 
 
 def pit_match_multi(
@@ -174,9 +178,10 @@ def pit_match_multi(
     carry_left: bool = False,
     dup_track: Sequence[bool] | None = None,
     dup_observation=None,
+    bucket_s: int | None = None,
 ) -> DataFrame:
     """Match N feature tables that share one entity-key mapping against the
-    label spine in ONE union/window pass.
+    label spine in ONE union/window pass — the engine's only union kernel.
 
     ``feats``: sequence of ``(prefix, feature_df, feature_time, value_cols,
     embargo_s)``. Returns ``[row_id, {prefix}__{c}..., {prefix}__feature_time
@@ -191,13 +196,22 @@ def pit_match_multi(
     adjacency argument makes this exact and free.
 
     ``carry_left=True`` carries the ENTIRE label row through the window as a
-    struct (same trick as :func:`_asof_union_single_pass`) and returns
-    ``[*labels.columns, {prefix}__...]`` instead of a row-id keyed table —
-    no row id, no checkpoint, no recombination join at all. This is the
-    zero-join plan for the common one-key-mapping build; the row-id form
-    remains for recombining multiple key-mapping groups.
+    struct and returns ``[*labels.columns, {prefix}__...]`` instead of a
+    row-id keyed table — no row id, no checkpoint, no recombination join at
+    all. This is the zero-join plan for the common one-key-mapping build and
+    for :func:`asof_join`; the row-id form remains for recombining multiple
+    key-mapping groups.
 
-    This is the multi-feature scale plan: the per-feature form shuffles the
+    ``bucket_s`` enables the skew-hardened variant: rows partition by
+    (key, floor(sort time / bucket_s)) so a hot entity key splits into
+    time-bounded partitions instead of one giant sort. The in-bucket window
+    finds matches within each bucket; matches that live in an EARLIER
+    bucket come from a per-feature carry table — one row per occupied
+    (key, bucket) holding each feature's latest payload of all preceding
+    buckets, built by a tiny per-key prefix scan (rows per key = occupied
+    buckets, not data volume) and joined back on (key, bucket).
+
+    This is the multi-feature scale plan: a per-feature form shuffles the
     spine once PER FEATURE (10 features = 10 spine shuffles + 10 window
     sorts + 10 recombination joins); here the spine and all feature tables
     union into one shuffle by entity key and one sort, and every feature's
@@ -208,14 +222,12 @@ def pit_match_multi(
     Per-feature embargo works under a shared sort because the embargo is
     applied to the FEATURE side: a feature row sorts at ``ft + embargo``
     (match iff ``ft < lt - e`` iff ``ft + e < lt``), labels sort at
-    ``label_time`` unshifted — equivalent to the single-feature plan's
-    label-side shift, but valid for any mix of embargos in one pass. The
-    strict/inclusive boundary keeps the same tag tie-break as
-    :func:`_asof_union_single_pass`; the lookback/staleness lower bound is
-    an equivalent post-filter (most-recent-match argument, see
-    :func:`_pit_match_union`)."""
-    from functools import reduce
-
+    ``label_time`` unshifted. At equal sort times label rows sort before
+    feature rows for strict (the feature is invisible) and after them for
+    inclusive. The lookback/staleness lower bound is a post-filter, which
+    is equivalent because the propagated match is the *most recent*
+    candidate — if it is out of window, every older candidate is too (same
+    argument as the reference's ASOF post-join CASE, engine.py:899-917)."""
     key_aliases = [f"__k{i}" for i in range(len(key_pairs))]
     label_tag = 0 if strict else 1
     track_any = dup_track is not None and any(dup_track)
@@ -239,8 +251,12 @@ def pit_match_multi(
             *[F.col(c).alias(f"v{i}") for i, c in enumerate(value_cols)],
             ft.alias("ft"),
         )
-        # NULL-key / NULL-time rows can never match; see
-        # _asof_union_single_pass for why they must not enter the window.
+        # Drop NULL-key AND NULL-time feature rows: SQL equality joins never
+        # match NULL keys, and every range predicate on a NULL feature_time
+        # is false — but NULL __t would sort FIRST in the running window and
+        # last(ignorenulls) could propagate a payload of unknown time,
+        # breaking the temporal invariant. The join kernel gets both for
+        # free from its predicates; filtering here keeps the kernels equal.
         rows = feature.where(ft.isNotNull())
         for _, sk in key_pairs:
             rows = rows.where(F.col(sk).isNotNull())
@@ -256,6 +272,21 @@ def pit_match_multi(
 
     unioned = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), sides)
 
+    part_cols = list(key_aliases)
+    if bucket_s is not None:
+        # Bucket index from the SORT time (__t, embargo already applied), so
+        # equal sort times always share a bucket: boundary ties keep the
+        # in-bucket strict/inclusive ordering, and a duplicate (key, time)
+        # group never straddles buckets.
+        unioned = unioned.withColumn(
+            "__b",
+            F.floor(
+                F.unix_micros(F.col("__t").cast("timestamp"))
+                / F.lit(bucket_s * 1_000_000)
+            ),
+        )
+        part_cols.append("__b")
+
     # Same-(t, tag) duplicate feature rows tie-break per feature: rows from
     # other features are NULL in __p{fi}, so asc_nulls_first ordering on
     # each orderable payload reproduces the per-feature max-payload pick
@@ -265,7 +296,7 @@ def pit_match_multi(
         if ok:
             order_cols.append(F.col(f"__p{fi}").asc_nulls_first())
     w = (
-        Window.partitionBy(*key_aliases)
+        Window.partitionBy(*part_cols)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -285,19 +316,20 @@ def pit_match_multi(
     # shared lead pair — four offset expressions total, independent of
     # the feature count (a per-feature formulation lagging the payload
     # structs measured ~8s slower at 100k x 10 features). The offset
-    # frames share the running frame's partitioning and ordering, so
-    # Catalyst plans ONE Window operator and the check costs no extra
-    # shuffle, sort, scan or job — the engine reads the per-feature
-    # group counts from ``dup_observation`` after the build's one
-    # materialization (vs the standalone pre-pass aggregation, which
-    # re-scanned and re-shuffled every source: ~6s of the 1m_x10
-    # build). Callers must route NULL-key/NULL-time rows (excluded from
-    # the union above) through the standalone check — parquet NULL
-    # statistics make that filter scan near-free on clean data.
+    # frames share the running frame's partitioning (including the time
+    # bucket) and ordering, so Catalyst plans ONE Window operator and the
+    # check costs no extra shuffle, sort, scan or job — the engine reads
+    # the per-feature group counts from ``dup_observation`` after the
+    # build's one materialization (vs the standalone pre-pass
+    # aggregation, which re-scanned and re-shuffled every source: ~6s of
+    # the 1m_x10 build). Callers must route NULL-key/NULL-time rows
+    # (excluded from the union above) through the standalone check —
+    # parquet NULL statistics make that filter scan near-free on clean
+    # data.
     flag_cols = []
     flag_names: list[int] = []
     if track_any:
-        w_off = Window.partitionBy(*key_aliases).orderBy(*order_cols)
+        w_off = Window.partitionBy(*part_cols).orderBy(*order_cols)
         fid = F.col("__fid")
         prev_same = (F.lag("__fid").over(w_off) == fid) & (
             F.lag("__t").over(w_off) == F.col("__t")
@@ -314,6 +346,7 @@ def pit_match_multi(
         flag_names = [fi for fi, t in enumerate(dup_track) if t]
 
     matched = unioned.select(
+        *(part_cols if bucket_s is not None else []),
         marker,
         "__lt",
         *[
@@ -334,6 +367,53 @@ def pit_match_multi(
         )
     matched = matched.where(F.col(marker).isNotNull())
 
+    if bucket_s is not None:
+        # Cross-bucket carry: per occupied (key, bucket) and per feature,
+        # the latest payload from any EARLIER bucket. One aggregation over
+        # the union yields every occupied bucket (label-only buckets get
+        # NULL summaries); per bucket, max(struct(t, p)) picks the latest
+        # time with max-payload tie-break (max_by on t alone for
+        # unorderable map payloads). Across buckets every time in bucket b
+        # precedes every time in bucket b+1, so the latest earlier payload
+        # is the LAST non-null bucket summary in bucket order.
+        summaries = []
+        for fi, ok in enumerate(orderable):
+            p = F.col(f"__p{fi}")
+            last_struct = F.when(
+                p.isNotNull(), F.struct(F.col("__t").alias("t"), p.alias("p"))
+            )
+            summaries.append(
+                (
+                    F.max(last_struct)
+                    if ok
+                    else F.max_by(last_struct, F.when(p.isNotNull(), F.col("__t")))
+                ).alias(f"__s{fi}")
+            )
+        w_prev = (
+            Window.partitionBy(*key_aliases)
+            .orderBy("__b")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        carry = (
+            unioned.groupBy(*part_cols)
+            .agg(*summaries)
+            .select(
+                *part_cols,
+                *[
+                    F.last(f"__s{fi}", ignorenulls=True).over(w_prev).alias(f"__c{fi}")
+                    for fi in range(len(feats))
+                ],
+            )
+        )
+        matched = matched.join(carry, part_cols, "left").select(
+            marker,
+            "__lt",
+            *[
+                F.coalesce(F.col(f"__m{fi}"), F.col(f"__c{fi}.p")).alias(f"__m{fi}")
+                for fi in range(len(feats))
+            ],
+        )
+
     lower_s = _effective_lower_bound_s(lookback_s, staleness_s)
     if carry_left:
         out_cols: list[Column] = [
@@ -353,131 +433,6 @@ def pit_match_multi(
         )
         out_cols.append(m["ft"].alias(f"{prefix}__feature_time"))
     return matched.select(*out_cols)
-
-
-def _pit_match_join(
-    labels: DataFrame,
-    feature: DataFrame,
-    *,
-    key_pairs: Sequence[tuple[str, str]],
-    label_time: str,
-    feature_time: str,
-    value_cols: Sequence[str],
-    prefix: str,
-    embargo_s: int,
-    lookback_s: int | None,
-    staleness_s: int | None,
-    strict: bool,
-    row_id: str,
-    broadcast_feature: bool,
-) -> DataFrame:
-    """Range left join on keys + per-label max_by dedup.
-
-    Mirrors the reference ROW_NUMBER strategy (engine.py:762-828) but uses
-    ``max_by`` instead of a window so Spark gets map-side partial
-    aggregation on the fanned-out candidate set before the row-id shuffle.
-    """
-    l = labels.select(row_id, *[lk for lk, _ in key_pairs], label_time).alias("l")
-    f = feature.alias("f")
-    if broadcast_feature:
-        f = F.broadcast(f)
-
-    lt = F.col(f"l.{label_time}")
-    ft = F.col(f"f.{feature_time}")
-
-    cond = None
-    for lk, sk in key_pairs:
-        c = F.col(f"l.{lk}") == F.col(f"f.{sk}")
-        cond = c if cond is None else (cond & c)
-
-    upper_ref = _minus(lt, embargo_s)
-    cond = cond & ((ft < upper_ref) if strict else (ft <= upper_ref))
-    lower_s = _effective_lower_bound_s(lookback_s, staleness_s)
-    if lower_s is not None:
-        # Keeping the lower bound inside the join keeps the fanout bounded
-        # by the window width (SURVEY §7.3 trap 1).
-        cond = cond & (ft >= _minus(lt, lower_s))
-
-    joined = l.join(f, cond, "left")
-
-    # ft-first struct: MAX compares feature_time first, then the payload
-    # values, so duplicate (key, ts) feature rows resolve to the max payload
-    # — deterministic, and identical to the union strategy's tie-break.
-    # Unmatched label rows (all-NULL candidates from the left join) yield a
-    # struct of NULLs, which struct ordering ranks below any real match.
-    # Map-typed payloads are not orderable: fall back to max_by on ft alone
-    # (arbitrary tie-break, the reference's keep_any semantics).
-    payload = F.struct(
-        ft.alias("ft"),
-        *[F.col(f"f.{c}").alias(f"v{i}") for i, c in enumerate(value_cols)],
-    )
-    if _payload_orderable(feature, value_cols):
-        best_agg = F.max(payload)
-    else:
-        best_agg = F.max_by(payload, ft)
-    best = joined.groupBy(F.col(f"l.{row_id}").alias(row_id)).agg(
-        best_agg.alias("__best")
-    )
-    return best.select(
-        row_id,
-        *[
-            F.col(f"__best.v{i}").alias(f"{prefix}__{c}")
-            for i, c in enumerate(value_cols)
-        ],
-        F.col("__best.ft").alias(f"{prefix}__feature_time"),
-    )
-
-
-def _pit_match_union(
-    labels: DataFrame,
-    feature: DataFrame,
-    *,
-    key_pairs: Sequence[tuple[str, str]],
-    label_time: str,
-    feature_time: str,
-    value_cols: Sequence[str],
-    prefix: str,
-    embargo_s: int,
-    lookback_s: int | None,
-    staleness_s: int | None,
-    strict: bool,
-    row_id: str,
-    bucket_s: int | None = None,
-) -> DataFrame:
-    """Union + running ``last(ignorenulls)`` — the no-fanout as-of plan.
-
-    Label rows are sorted at ``label_time - embargo`` so the running window
-    naturally enforces the embargoed upper bound; the lookback/staleness
-    lower bound is applied as a post-filter, which is equivalent because the
-    propagated match is the *most recent* candidate — if it is out of
-    window, every older candidate is too (same argument as the reference's
-    ASOF post-join CASE, engine.py:899-917).
-
-    Thin wrapper over :func:`_asof_union_single_pass` with the spine
-    ``row_id`` as the only carried left column (the engine recombines
-    features on it afterwards). ``bucket_s`` enables the skew-hardened
-    time-bucketed variant.
-    """
-    spine = labels.select(row_id, *[lk for lk, _ in key_pairs], label_time)
-    out = _asof_union_single_pass(
-        spine,
-        feature,
-        key_pairs=key_pairs,
-        left_time=label_time,
-        right_time=feature_time,
-        value_cols=value_cols,
-        prefix=prefix,
-        embargo_s=embargo_s,
-        lookback_s=lookback_s,
-        staleness_s=staleness_s,
-        strict=strict,
-        bucket_s=bucket_s,
-    )
-    return out.select(
-        row_id,
-        *[F.col(f"{prefix}__{c}") for c in value_cols],
-        f"{prefix}__feature_time",
-    )
 
 
 def estimated_size_bytes(df: DataFrame) -> int | None:
@@ -502,8 +457,94 @@ def estimated_size_bytes(df: DataFrame) -> int | None:
 
 
 # Right sides estimated at or under this are broadcast through the fanout
-# join; larger ones take the no-fanout union plan.
+# range join; larger ones shuffle-join on the entity keys.
 BROADCAST_BYTES_THRESHOLD = 64 * 1024 * 1024
+
+
+def _range_join(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    key_pairs: Sequence[tuple[str, str]],
+    left_time: str,
+    right_time: str,
+    value_cols: Sequence[str],
+    prefix: str,
+    embargo_s: int,
+    lookback_s: int | None,
+    staleness_s: int | None,
+    strict: bool,
+    row_id: str | None = None,
+    broadcast: bool | None = None,
+) -> DataFrame:
+    """Range left join on keys + per-label max — the one join kernel.
+
+    Mirrors the reference ROW_NUMBER strategy (engine.py:762-828) but
+    aggregates with ``max`` instead of a window so Spark gets map-side
+    partial aggregation on the fanned-out candidate set before the row-id
+    shuffle. With ``row_id`` (a unique column of ``left``) the result is
+    ``[row_id, {prefix}__...]``. Without it, one linear pipeline carries
+    every ``left`` column through the aggregation with ``first()``: scan ->
+    row id -> (broadcast) join -> single shuffle by row id -> aggregate; the
+    nondeterministic row id is generated and consumed inside one
+    deterministic plan, so it never needs pinning. ``broadcast=None``
+    broadcasts ``right`` when its Catalyst size estimate is at most
+    :data:`BROADCAST_BYTES_THRESHOLD`.
+    """
+    carried = [] if row_id is not None else list(left.columns)
+    if row_id is None:
+        row_id = "__asof_rowid"
+        left = left.withColumn(row_id, F.monotonically_increasing_id())
+    if broadcast is None:
+        est = estimated_size_bytes(right)
+        broadcast = est is not None and est <= BROADCAST_BYTES_THRESHOLD
+    l = left.alias("l")
+    f = F.broadcast(right.alias("f")) if broadcast else right.alias("f")
+
+    lt = F.col(f"l.{left_time}")
+    ft = F.col(f"f.{right_time}")
+    cond = reduce(
+        lambda a, b: a & b,
+        [F.col(f"l.{lk}") == F.col(f"f.{sk}") for lk, sk in key_pairs],
+    )
+    upper_ref = _minus(lt, embargo_s)
+    cond = cond & ((ft < upper_ref) if strict else (ft <= upper_ref))
+    lower_s = _effective_lower_bound_s(lookback_s, staleness_s)
+    if lower_s is not None:
+        # Keeping the lower bound inside the join keeps the fanout bounded
+        # by the window width (SURVEY §7.3 trap 1).
+        cond = cond & (ft >= _minus(lt, lower_s))
+
+    joined = l.join(f, cond, "left")
+
+    # ft-first struct: MAX compares feature_time first, then the payload
+    # values, so duplicate (key, ts) feature rows resolve to the max payload
+    # — deterministic, and identical to the union kernel's tie-break.
+    # Unmatched label rows (all-NULL candidates from the left join) yield a
+    # struct of NULLs, which struct ordering ranks below any real match.
+    # Map-typed payloads are not orderable: fall back to max_by on ft alone
+    # (arbitrary tie-break, the reference's keep_any semantics).
+    payload = F.struct(
+        ft.alias("ft"),
+        *[F.col(f"f.{c}").alias(f"v{i}") for i, c in enumerate(value_cols)],
+    )
+    best_agg = (
+        F.max(payload)
+        if _payload_orderable(right, value_cols)
+        else F.max_by(payload, ft)
+    )
+    best = joined.groupBy(F.col(f"l.{row_id}").alias(row_id)).agg(
+        *[F.first(F.col(f"l.{c}")).alias(c) for c in carried],
+        best_agg.alias("__best"),
+    )
+    return best.select(
+        *(carried or [row_id]),
+        *[
+            F.col(f"__best.v{i}").alias(f"{prefix}__{c}")
+            for i, c in enumerate(value_cols)
+        ],
+        F.col("__best.ft").alias(f"{prefix}__feature_time"),
+    )
 
 
 def asof_join(
@@ -527,16 +568,18 @@ def asof_join(
     right-side values. Durations are in seconds. ``on`` accepts a column
     name, a list of names, or (left, right) name pairs.
 
-    Physical shape: ``strategy='auto'`` takes the single-pass
-    union/last_value plan — NO row id, NO persist, NO recombination join;
-    the label row rides through the window as a struct, one shuffle per
-    side total. For hot entity keys, ``skew_bucket`` (seconds) splits each
-    key's partition into time buckets of that width with a cross-bucket
-    carry join (see ``_asof_union_single_pass``), bounding any single sort
-    partition by the key's density within one bucket. ``strategy='join'``
-    (explicit alternative for skew) uses a range join, broadcasting the
-    right side when its Catalyst size estimate is small.
+    Physical shape: ``strategy='auto'`` takes the single-pass union plan
+    (:func:`pit_match_multi` with ``carry_left``) — NO row id, NO persist,
+    NO recombination join; the label row rides through the window as a
+    struct, one shuffle per side total. For hot entity keys, ``skew_bucket``
+    (seconds) splits each key's partition into time buckets of that width
+    with a cross-bucket carry join, bounding any single sort partition by
+    the key's density within one bucket. ``strategy='join'`` (explicit
+    alternative for skew) uses the range join, broadcasting the right side
+    when its Catalyst size estimate is small (``broadcast_right`` forces
+    the choice either way).
     """
+    strategy = resolve_strategy(strategy)
     if isinstance(on, str):
         pairs = [(on, on)]
     else:
@@ -546,31 +589,19 @@ def asof_join(
         value_cols = [c for c in right.columns if c not in skip]
     pfx = prefix if prefix is not None else "r"
 
-    if strategy == "auto":
-        # Measured default — see pit_match: the no-fanout union plan wins at
-        # every tested shape; 'join' is the explicit skew-mitigation path.
-        strategy = "union"
-    if strategy == "join" and broadcast_right is None:
-        est = estimated_size_bytes(right)
-        broadcast_right = est is not None and est <= BROADCAST_BYTES_THRESHOLD
-
     if strategy == "union":
-        return _asof_union_single_pass(
+        return pit_match_multi(
             left,
-            right,
+            [(pfx, right, right_time, value_cols, embargo)],
             key_pairs=pairs,
-            left_time=left_time,
-            right_time=right_time,
-            value_cols=value_cols,
-            prefix=pfx,
-            embargo_s=embargo,
+            label_time=left_time,
             lookback_s=lookback,
             staleness_s=staleness,
             strict=strict,
+            carry_left=True,
             bucket_s=skew_bucket,
         )
-
-    return _asof_join_single_pass(
+    return _range_join(
         left,
         right,
         key_pairs=pairs,
@@ -582,207 +613,5 @@ def asof_join(
         lookback_s=lookback,
         staleness_s=staleness,
         strict=strict,
-        broadcast_right=bool(broadcast_right),
-    )
-
-
-def _asof_join_single_pass(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key_pairs: Sequence[tuple[str, str]],
-    left_time: str,
-    right_time: str,
-    value_cols: Sequence[str],
-    prefix: str,
-    embargo_s: int,
-    lookback_s: int | None,
-    staleness_s: int | None,
-    strict: bool,
-    broadcast_right: bool,
-) -> DataFrame:
-    """Fanout range-join + per-row max_by, carrying the label columns through
-    the aggregation with first() — one linear pipeline: scan -> rowid ->
-    (broadcast) join -> single shuffle by rowid -> aggregate. No persist and
-    no recombination join; the nondeterministic rowid is generated and
-    consumed inside one deterministic plan, so it never needs pinning."""
-    rid = "__asof_rowid"
-    l = left.withColumn(rid, F.monotonically_increasing_id()).alias("l")
-    f = right.alias("f")
-    if broadcast_right:
-        f = F.broadcast(f)
-
-    lt = F.col(f"l.{left_time}")
-    ft = F.col(f"f.{right_time}")
-    cond = None
-    for lk, sk in key_pairs:
-        c = F.col(f"l.{lk}") == F.col(f"f.{sk}")
-        cond = c if cond is None else (cond & c)
-    upper_ref = _minus(lt, embargo_s)
-    cond = cond & ((ft < upper_ref) if strict else (ft <= upper_ref))
-    lower_s = _effective_lower_bound_s(lookback_s, staleness_s)
-    if lower_s is not None:
-        cond = cond & (ft >= _minus(lt, lower_s))
-
-    joined = l.join(f, cond, "left")
-    # ft-first struct + MAX: deterministic on tied feature_time (max payload
-    # wins), matching the union strategy — see _pit_match_join. Map-typed
-    # payloads fall back to max_by on ft (arbitrary tie-break).
-    payload = F.struct(
-        ft.alias("ft"),
-        *[F.col(f"f.{c}").alias(f"v{i}") for i, c in enumerate(value_cols)],
-    )
-    best_agg = (
-        F.max(payload)
-        if _payload_orderable(right, value_cols)
-        else F.max_by(payload, ft)
-    )
-    agg = joined.groupBy(F.col(f"l.{rid}")).agg(
-        *[F.first(F.col(f"l.{c}")).alias(c) for c in left.columns],
-        best_agg.alias("__best"),
-    )
-    return agg.select(
-        *left.columns,
-        *[
-            F.col(f"__best.v{i}").alias(f"{prefix}__{c}")
-            for i, c in enumerate(value_cols)
-        ],
-        F.col("__best.ft").alias(f"{prefix}__feature_time"),
-    )
-
-
-def _asof_union_single_pass(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key_pairs: Sequence[tuple[str, str]],
-    left_time: str,
-    right_time: str,
-    value_cols: Sequence[str],
-    prefix: str,
-    embargo_s: int,
-    lookback_s: int | None,
-    staleness_s: int | None,
-    strict: bool,
-    bucket_s: int | None = None,
-) -> DataFrame:
-    """Union/last_value as-of join carrying the whole left row through the
-    window — no row id, no persist, no recombination join.
-
-    ``bucket_s`` enables the skew-hardened variant: rows partition by
-    (key, floor(time / bucket_s)) so a hot entity key splits into
-    time-bounded partitions instead of one giant sort. The in-bucket window
-    finds matches within each bucket; matches that live in an EARLIER
-    bucket come from a carry table — one row per occupied (key, bucket)
-    holding the latest feature payload of all preceding buckets, built by a
-    tiny per-key prefix scan (rows per key = occupied buckets, not data
-    volume) and joined back on (key, bucket).
-    """
-    key_aliases = [f"__k{i}" for i in range(len(key_pairs))]
-    ft = F.col(right_time)
-
-    payload = F.struct(
-        *[F.col(c).alias(f"v{i}") for i, c in enumerate(value_cols)],
-        ft.alias("ft"),
-    )
-    # Drop NULL-key AND NULL-time feature rows: SQL equality joins never
-    # match NULL keys, and every range predicate on a NULL feature_time is
-    # false — but NULL __t would sort FIRST in the running window and
-    # last(ignorenulls) could propagate a payload of unknown time, breaking
-    # the temporal invariant. The join strategy gets both for free from its
-    # predicates; filtering here keeps the strategies identical.
-    feat_rows = right.where(F.col(right_time).isNotNull())
-    for _, sk in key_pairs:
-        feat_rows = feat_rows.where(F.col(sk).isNotNull())
-    feat_side = feat_rows.select(
-        *[F.col(sk).alias(a) for (_, sk), a in zip(key_pairs, key_aliases)],
-        ft.alias("__t"),
-        payload.alias("__payload"),
-    ).withColumn("__is_label", F.lit(False))
-
-    lt = F.col(left_time)
-    lbl_side = left.select(
-        *[F.col(lk).alias(a) for (lk, _), a in zip(key_pairs, key_aliases)],
-        _minus(lt, embargo_s).alias("__t"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("__lrow"),
-        lt.alias("__lt"),
-    ).withColumn("__is_label", F.lit(True))
-
-    unioned = lbl_side.unionByName(feat_side, allowMissingColumns=True)
-
-    part_cols = list(key_aliases)
-    if bucket_s is not None:
-        # Bucket index from the SORT time (__t, embargo already applied), so
-        # equal sort times always share a bucket and boundary ties keep the
-        # in-bucket strict/inclusive ordering semantics.
-        bcol = F.floor(
-            F.unix_micros(F.col("__t").cast("timestamp")) / F.lit(bucket_s * 1_000_000)
-        )
-        unioned = unioned.withColumn("__b", bcol)
-        part_cols.append("__b")
-
-    label_tag = 0 if strict else 1
-    tag = F.when(F.col("__is_label"), F.lit(label_tag)).otherwise(F.lit(1 - label_tag))
-    # Payload tie-break only when the payload is orderable (maps are not);
-    # otherwise duplicate (key, ts) rows resolve arbitrarily (keep_any).
-    order_cols = [F.col("__t").asc(), tag.asc()]
-    if _payload_orderable(right, value_cols):
-        order_cols.append(F.col("__payload").asc_nulls_first())
-    w = (
-        Window.partitionBy(*part_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.withColumn("__match", F.last("__payload", ignorenulls=True).over(w))
-
-    matched = filled.where(F.col("__is_label"))
-
-    if bucket_s is not None:
-        # Cross-bucket carry: latest feature payload from any EARLIER bucket,
-        # per occupied (key, bucket). Per bucket, max(struct(t, p)) picks
-        # latest time with max-payload tie-break (max_by on t alone for
-        # unorderable map payloads). Across buckets, every time in bucket b
-        # precedes every time in bucket b+1, so the latest earlier payload
-        # is simply the LAST non-null bucket summary in bucket order — no
-        # struct ordering needed.
-        last_struct = F.struct(F.col("__t").alias("t"), F.col("__payload").alias("p"))
-        last_agg = (
-            F.max(last_struct)
-            if _payload_orderable(right, value_cols)
-            else F.max_by(last_struct, F.col("__t"))
-        )
-        occupied = unioned.select(*key_aliases, "__b").distinct()
-        bucket_last = (
-            unioned.where(~F.col("__is_label"))
-            .groupBy(*key_aliases, "__b")
-            .agg(last_agg.alias("__last"))
-        )
-        per_bucket = occupied.join(bucket_last, [*key_aliases, "__b"], "left")
-        w_prev = (
-            Window.partitionBy(*key_aliases)
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry = per_bucket.select(
-            *key_aliases,
-            "__b",
-            F.last("__last", ignorenulls=True).over(w_prev).alias("__carry"),
-        )
-        matched = matched.join(carry, [*key_aliases, "__b"], "left").withColumn(
-            "__match", F.coalesce(F.col("__match"), F.col("__carry.p"))
-        )
-
-    lower_s = _effective_lower_bound_s(lookback_s, staleness_s)
-    if lower_s is not None:
-        in_window = F.col("__match.ft") >= _minus(F.col("__lt"), lower_s)
-        matched = matched.withColumn(
-            "__match", F.when(in_window, F.col("__match")).otherwise(F.lit(None))
-        )
-    return matched.select(
-        *[F.col(f"__lrow.{c}").alias(c) for c in left.columns],
-        *[
-            F.col(f"__match.v{i}").alias(f"{prefix}__{c}")
-            for i, c in enumerate(value_cols)
-        ],
-        F.col("__match.ft").alias(f"{prefix}__feature_time"),
+        broadcast=broadcast_right,
     )

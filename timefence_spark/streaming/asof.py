@@ -347,8 +347,9 @@ def stream_static_asof_join(
     broadcast_features: bool | None = None,
 ) -> DataFrame:
     """As-of join of a (streaming) label DataFrame against a *static*
-    feature DataFrame — the streaming analogue of the batch broadcast
-    strategy, entirely JVM-side.
+    feature DataFrame — the streaming analogue of the batch range join
+    (``strategy='join'``) with a broadcast feature side, entirely
+    JVM-side.
 
     The static side is compacted to ONE row per entity key holding its
     feature history as an array of (ft, values) structs sorted ascending,
@@ -360,7 +361,7 @@ def stream_static_asof_join(
     store; works identically on a batch ``left``. Memory bound is the
     executor broadcast limit, not a driver-side collect.
 
-    ``broadcast_features`` follows the batch safety policy
+    ``broadcast_features`` follows the batch range join's broadcast rule
     (:data:`timefence_spark.operators.asof.BROADCAST_BYTES_THRESHOLD`):
     the default ``None`` hints the broadcast only when the *raw static
     side's* Catalyst size estimate fits the threshold (the compacted
