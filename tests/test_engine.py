@@ -334,12 +334,19 @@ def test_duplicate_detection_error_and_keep_any(spark, tmp_path):
         with pytest.raises(TimefenceDuplicateError):
             tf.build(labels, [feat_err], spark=spark, skew_bucket=skew_bucket)
         # With an output path the in-window duplicate count lands with the
-        # write action (round 13); the error must still abort the build AND
-        # remove the output.
+        # write action, which writes to a staging path: the error must
+        # abort the build, create no output, and leave an earlier output
+        # byte-identical.
         out = tmp_path / f"dup_out_{skew_bucket}.parquet"
         with pytest.raises(TimefenceDuplicateError):
             tf.build(labels, [feat_err], str(out), spark=spark, skew_bucket=skew_bucket)
         assert not out.exists()
+        prev = tmp_path / f"prev_out_{skew_bucket}.parquet"
+        prev.write_bytes(b"an earlier build's output")
+        with pytest.raises(TimefenceDuplicateError):
+            tf.build(labels, [feat_err], str(prev), spark=spark, skew_bucket=skew_bucket)
+        assert prev.read_bytes() == b"an earlier build's output"
+        assert not list(tmp_path.glob(".*staging*"))
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
             res = tf.build(labels, [feat_ok], spark=spark, skew_bucket=skew_bucket)
@@ -349,20 +356,18 @@ def test_duplicate_detection_error_and_keep_any(spark, tmp_path):
 
 def test_duplicate_detection_null_key_rows(spark, tmp_path):
     """Duplicate (key, ts) groups whose key or timestamp is NULL never
-    enter the union window (NULL keys cannot match), so the round-13
-    in-window counter is blind to them — the NULL-subset branch of the
-    batched pre-pass must still surface them, exactly like the classic
-    standalone check (SQL GROUP BY groups NULLs)."""
-    dup = spark.createDataFrame(
-        [
-            (None, dt.datetime(2024, 1, 1), 1.0),
-            (None, dt.datetime(2024, 1, 1), 2.0),
-            (1, dt.datetime(2024, 1, 2), 3.0),
-        ],
-        "user_id int, ts timestamp_ntz, v double",
-    )
-    p = str(tmp_path / "nulldup.parquet")
-    dup.coalesce(1).write.parquet(p)
+    enter the union window (NULL keys and times cannot match), so the
+    in-window counter is blind to them. The build observes each feature
+    table's NULL-key/NULL-time rows in its one action and aggregates the
+    NULL subset only when there are some: a NULL duplicate group must
+    still raise exactly like the classic standalone check (SQL GROUP BY
+    groups NULLs), and NULL rows without a duplicate must not."""
+    d1, d2, d3 = (dt.datetime(2024, 1, day) for day in (1, 2, 3))
+    cases = {
+        "null_key_dup": ([(None, d1, 1.0), (None, d1, 2.0), (1, d2, 3.0)], True),
+        "null_ts_dup": ([(1, None, 1.0), (1, None, 2.0), (1, d2, 3.0)], True),
+        "null_key_no_dup": ([(None, d1, 1.0), (None, d2, 2.0), (1, d3, 3.0)], False),
+    }
     labels = tf.Labels(
         df=spark.createDataFrame(
             [(1, dt.datetime(2024, 2, 1), True)],
@@ -372,13 +377,25 @@ def test_duplicate_detection_null_key_rows(spark, tmp_path):
         label_time="label_time",
         target="y",
     )
-    feat = tf.Feature(
-        tf.Source(p, keys="user_id", timestamp="ts"), columns="v", name="f"
-    )
-    with pytest.raises(TimefenceDuplicateError):
-        tf.build(labels, [feat], spark=spark)
+    for name, (rows, has_dup) in cases.items():
+        p = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, "user_id int, ts timestamp_ntz, v double").coalesce(
+            1
+        ).write.parquet(p)
+        feat = tf.Feature(
+            tf.Source(p, keys="user_id", timestamp="ts"), columns="v", name="f"
+        )
+        for output in (None, str(tmp_path / f"{name}_out.parquet")):
+            if has_dup:
+                with pytest.raises(TimefenceDuplicateError):
+                    tf.build(labels, [feat], output, spark=spark)
+                assert not (tmp_path / f"{name}_out.parquet").exists()
+            else:
+                res = tf.build(labels, [feat], output, spark=spark)
+                assert res.stats.row_count == 1
+                assert [r["f__v"] for r in res.dataframe.collect()] == [3.0]
     feat_ok = tf.Feature(
-        tf.Source(p, keys="user_id", timestamp="ts"),
+        tf.Source(str(tmp_path / "null_key_dup.parquet"), keys="user_id", timestamp="ts"),
         columns="v",
         name="f",
         on_duplicate="keep_any",
@@ -897,6 +914,26 @@ def test_build_mixed_key_mappings_two_union_groups(spark, tmp_path, users_feat_l
     for uid, (mapped, plain) in rows.items():
         assert mapped == plain, f"user {uid}: {mapped} != {plain}"
     assert any(v[0] is not None for v in rows.values())
+
+    # The rebuild audit of two key mappings takes the row-id path: the
+    # clean output audits clean, and a corrupted column is caught on its
+    # own feature only.
+    def audit(path):
+        return tf.audit(
+            path, [mapped_feat, plain_feat], keys="user_id",
+            label_time="label_time", spark=spark,
+        )
+
+    assert not audit(out).has_leakage
+    bad_path = str(tmp_path / "mixed_keys_bad.parquet")
+    got.withColumn(
+        "last_amount__amount", F.col("last_amount__amount") + 100.0
+    ).coalesce(1).write.parquet(bad_path)
+    report = audit(bad_path)
+    n_matched = sum(v[0] is not None for v in rows.values())
+    assert report["last_amount"].leaky_row_count == n_matched
+    assert report.leaky_features == ["last_amount"]
+    assert report.total_rows == 50
 
 
 def test_union_group_chunking_matches_join(spark, monkeypatch, tmp_path):

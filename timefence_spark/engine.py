@@ -24,12 +24,14 @@ import shutil
 import time
 import uuid
 import warnings
-from collections.abc import Sequence
+from collections.abc import Collection, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 from pathlib import Path
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,8 +115,6 @@ def _preload_sources(spark: SparkSession, flat_features) -> dict[str, DataFrame]
     sequentially on the calling thread; two concurrent CSV loads could
     otherwise "restore" each other's conf value and silently flip every
     later timestamp to TIMESTAMP_LTZ."""
-    from concurrent.futures import ThreadPoolExecutor
-
     unique_sources: list = []
     seen: set[str] = set()
     for feat in flat_features:
@@ -175,21 +175,69 @@ def _epoch_us(col: F.Column, dtype: T.DataType) -> F.Column:
     return F.unix_micros(col)
 
 
-def _write_single_parquet(df: DataFrame, path: Path) -> None:
-    """Write a DataFrame as ONE parquet file at `path` (reference UX parity:
-    COPY TO writes a single file, engine.py:1312-1317). Only sensible at
-    driver scale — directory outputs are the 100 TB path."""
-    path = Path(path)
-    path.parent.mkdir(parents=True, exist_ok=True)
-    tmp_dir = path.parent / f".{path.name}.tmp-{uuid.uuid4().hex[:8]}"
-    df.coalesce(1).write.mode("overwrite").parquet(str(tmp_dir))
-    parts = glob.glob(str(tmp_dir / "part-*.parquet"))
-    if not parts:
-        raise TimefenceValidationError(f"No parquet part written under {tmp_dir}")
-    if path.exists():
+def _staging_path(output: str | Path) -> Path | None:
+    """Hidden sibling that a write lands in before it replaces ``output``
+    (None for URI outputs, which are written in place)."""
+    out = _abs(output)
+    if "://" in out:
+        return None
+    final = Path(out)
+    return final.parent / f".{final.name}.staging-{uuid.uuid4().hex[:8]}"
+
+
+def _remove_path(path: Path | None) -> None:
+    if path is None:
+        return
+    if path.is_dir():
+        shutil.rmtree(path, ignore_errors=True)
+    elif path.exists():
         path.unlink()
-    shutil.move(parts[0], str(path))
-    shutil.rmtree(tmp_dir, ignore_errors=True)
+
+
+def _single_file(output: str | Path, partition_by: Sequence[str] | None) -> bool:
+    """A ``.parquet``/``.pq`` output is ONE parquet file (reference UX
+    parity: COPY TO writes a single file, engine.py:1312-1317). Only
+    sensible at driver scale — directory outputs are the 100 TB path."""
+    return not partition_by and str(output).endswith((".parquet", ".pq"))
+
+
+def _stage_output(
+    df: DataFrame,
+    output: str | Path,
+    staging: Path | None,
+    partition_by: Sequence[str] | None = None,
+) -> None:
+    """Write ``df`` into ``staging`` (or straight to a URI ``output``);
+    :func:`_commit_output` moves it into place."""
+    if _single_file(output, partition_by):
+        df = df.coalesce(1)
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    if staging is not None:
+        staging.parent.mkdir(parents=True, exist_ok=True)
+    writer.parquet(str(staging) if staging is not None else _abs(output))
+
+
+def _commit_output(
+    staging: Path | None,
+    output: str | Path,
+    partition_by: Sequence[str] | None = None,
+) -> None:
+    """Replace ``output`` with the staged write: until this rename an
+    earlier output at that path is untouched."""
+    if staging is None:
+        return
+    src = staging
+    if _single_file(output, partition_by):
+        parts = glob.glob(str(staging / "part-*.parquet"))
+        if not parts:
+            raise TimefenceValidationError(f"No parquet part written under {staging}")
+        src = Path(parts[0])
+    final = Path(_abs(output))
+    _remove_path(final)
+    shutil.move(str(src), str(final))
+    _remove_path(staging)
 
 
 def _write_output(
@@ -197,13 +245,14 @@ def _write_output(
     output: str | Path,
     partition_by: Sequence[str] | None = None,
 ) -> None:
-    out = _abs(output)
-    if partition_by:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(out)
-    elif out.endswith(".parquet") or out.endswith(".pq"):
-        _write_single_parquet(df, Path(out))
-    else:
-        df.write.mode("overwrite").parquet(out)
+    """Stage and commit in one step (no check runs in between)."""
+    staging = _staging_path(output)
+    try:
+        _stage_output(df, output, staging, partition_by)
+    except BaseException:
+        _remove_path(staging)
+        raise
+    _commit_output(staging, output, partition_by)
 
 
 def _content_hash_safe(path: Path | None, store: Any) -> str | None:
@@ -337,91 +386,67 @@ def _apply_dup_policy(src_df: DataFrame, feat: Feature, dup_pairs: int) -> None:
     )
 
 
-def _observation_get(obs: Any, timeout_s: float) -> dict | None:
-    """``Observation.get`` that cannot wedge the build: once the
-    observed plan's first action completes Spark resolves every
-    registered observation (raising when its CollectMetrics node was
-    optimized away), so post-action this returns promptly — the timeout
-    thread is a belt-and-suspenders guard for an unresolved promise.
-    Returns the metrics dict, or None when unavailable (caller falls
-    back to the standalone check)."""
-    import threading
-
-    box: dict[str, Any] = {}
-
-    def _get() -> None:
-        try:
-            box["v"] = obs.get
-        except Exception as exc:  # optimized-away node -> standalone path
-            box["e"] = exc
-
-    t = threading.Thread(target=_get, daemon=True)
-    t.start()
-    t.join(timeout_s)
-    return box.get("v")
+def _observation_get(obs: Any) -> dict | None:
+    """``Observation.get`` after the observed plan's action ran. Spark
+    resolves every observation of an executed plan when the action ends,
+    raising for one whose CollectMetrics node the optimizer removed
+    (statically empty relations, AQE replacing a zero-row subtree).
+    Returns the metrics, or None when unavailable — callers fall back to
+    a standalone aggregation."""
+    try:
+        return obs.get
+    except Exception:
+        return None
 
 
-def _null_subset(src_df: DataFrame, feat: Feature) -> DataFrame:
-    """The rows the union window plan excludes: NULL in any key or the
-    timestamp. Parquet NULL statistics prune the scan to footer reads
-    when the columns are NULL-free, so this subset check is near-free
-    on clean data."""
-    cond = F.col(feat.source.timestamp).isNull()
+def _null_key_or_time(feat: Feature, time_col: str) -> F.Column:
+    """Rows the union window plan excludes: NULL in any key or the time."""
+    cond = F.col(time_col).isNull()
     for k in feat.source_keys:
         cond = cond | F.col(k).isNull()
-    return src_df.where(cond)
+    return cond
 
 
 def _batch_duplicate_checks(
-    checks: list[tuple[str, DataFrame, Feature]],
-    null_subset_checks: list[tuple[str, DataFrame, Feature]] = (),
-) -> dict[str, int]:
+    checks: Sequence[tuple[DataFrame, Feature]],
+    null_subset_checks: Sequence[tuple[DataFrame, Feature]] = (),
+) -> list[int]:
     """Run every source's duplicate check as ONE Spark action.
 
-    A 10-feature build used to pay 10 sequential aggregation jobs here
-    (~0.5-1 s of job overhead each at 1M-label scale); unioning the
-    per-source aggregates into a single action runs the scans in parallel
-    and pays the overhead once. Shuffle volume is unchanged —
+    Unioning the per-source aggregates into a single action runs the
+    scans in parallel and pays the per-job overhead once (a 10-feature
+    build used to pay 10 sequential jobs). Shuffle volume is unchanged —
     O(distinct (key, ts)) per source, map-side combined.
 
     ``checks`` get the full aggregation with the on_duplicate policy
-    applied immediately. ``null_subset_checks`` are sources whose main
-    duplicate count rides the build's window pass (pit_match_multi
+    applied in declaration order. ``null_subset_checks`` are sources whose
+    main duplicate count rides the build's window pass (pit_match_multi
     dup_track); only their NULL-key/NULL-time rows — which that pass
-    cannot see — are aggregated here, and their policy is applied later
-    by the engine once the window metrics land. Returns
-    {tag: null_subset_dup_pairs}."""
+    cannot see — are aggregated, and the caller applies the policy.
+    Returns their duplicate-group counts, in order."""
     from functools import reduce
 
     branches = [
-        _dup_check_agg(src_df, feat).select(
-            F.lit(tag).alias("tag"), "dup_pairs"
-        )
-        for tag, src_df, feat in checks
+        _dup_check_agg(src_df, feat).select(F.lit(f"c{i}").alias("tag"), "dup_pairs")
+        for i, (src_df, feat) in enumerate(checks)
     ]
     if null_subset_checks:
-        # The NULL subsets are ~0 rows by construction (parquet NULL
-        # stats prune clean sources to footer reads), so the cost here
-        # is pure stage-scheduling overhead — a per-source agg branch
-        # like the full checks above turns into ~2 AQE stages per
-        # source. Instead every source's NULL rows union into ONE
-        # stream, carrying its (keys, ts) group as a per-source struct
-        # column (structs keep exact type semantics; other sources'
-        # rows are NULL there, so cross-source rows can never collide),
-        # and one two-stage aggregation covers all sources.
-        sides = []
-        for tag, src_df, feat in null_subset_checks:
-            key_ts = [*feat.source_keys, feat.source.timestamp]
-            sides.append(
-                _null_subset(src_df, feat).select(
-                    F.lit(tag).alias("tag"),
-                    F.struct(*key_ts).alias(f"__g_{tag}"),
-                )
+        # Every source's NULL rows union into ONE stream carrying its
+        # (keys, ts) group as a per-source struct column (structs keep
+        # exact type semantics; other sources' rows are NULL there, so
+        # cross-source rows never collide), and one two-stage aggregation
+        # covers all sources instead of ~2 AQE stages per source.
+        sides = [
+            src_df.where(_null_key_or_time(feat, feat.source.timestamp)).select(
+                F.lit(f"n{i}").alias("tag"),
+                F.struct(*feat.source_keys, feat.source.timestamp).alias(f"__g{i}"),
             )
+            for i, (src_df, feat) in enumerate(null_subset_checks)
+        ]
         unioned = reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), sides
         )
-        group_cols = [f"__g_{tag}" for tag, _, _ in null_subset_checks]
+        group_cols = [f"__g{i}" for i in range(len(sides))]
         grouped = unioned.groupBy("tag", *group_cols).agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -431,13 +456,13 @@ def _batch_duplicate_checks(
             )
         )
     if not branches:
-        return {}
+        return []
     rows = reduce(lambda a, b: a.unionByName(b), branches).collect()
     dup_pairs = {r["tag"]: int(r["dup_pairs"] or 0) for r in rows}
-    for tag, src_df, feat in checks:
-        _apply_dup_policy(src_df, feat, dup_pairs[tag])
+    for i, (src_df, feat) in enumerate(checks):
+        _apply_dup_policy(src_df, feat, dup_pairs[f"c{i}"])
     # A source with zero NULL rows contributes no group row at all.
-    return {tag: dup_pairs.get(tag, 0) for tag, _, _ in null_subset_checks}
+    return [dup_pairs.get(f"n{i}", 0) for i in range(len(null_subset_checks))]
 
 
 def _validate_splits(
@@ -626,6 +651,767 @@ def _tuned_shuffle_partitions(
     return None
 
 
+# ---------------------------------------------------------------------------
+# build() phases
+# ---------------------------------------------------------------------------
+
+
+@dataclass
+class _Build:
+    """One build's validated options plus the state its phases hand on
+    (phase 1 creates it; later phases read it and append to it)."""
+
+    spark: SparkSession
+    labels: Labels
+    features: list[Feature]
+    output: str | Path | None
+    lookback_td: timedelta
+    staleness_td: timedelta | None
+    join: str
+    on_missing: str
+    strategy: str
+    skew_bucket_s: int | None
+    part_list: list[str]
+    flatten_columns: bool
+    splits: dict[str, tuple[str, str]] | None
+    store: Any
+    progress: Callable[[str], None] | None
+    start_time: float
+    transcript: list[str] = field(default_factory=list)
+    feature_cache_keys: list[str] = field(default_factory=list)
+    feature_cached: dict[str, bool] = field(default_factory=dict)
+
+    def emit(self, msg: str) -> None:
+        if self.progress is not None:
+            self.progress(msg)
+
+    def cache_key(self, feature_cache_keys: list[str]) -> str:
+        output_spec = (
+            f"{_abs(str(self.output))}:{sorted(self.part_list)}:{self.flatten_columns}"
+            if self.output is not None
+            else ""
+        )
+        return self.store.build_cache_key(
+            _content_hash_safe(self.labels.path, self.store),
+            feature_cache_keys,
+            format_duration(self.lookback_td),
+            format_duration(self.staleness_td),
+            self.join,
+            self.on_missing,
+            output_spec,
+        )
+
+    def invariant(self, feat: Feature) -> str:
+        lt = self.labels.label_time
+        op = "<" if self.join == "strict" else "<="
+        line = (
+            f"-- pit_match[{feat.name}] strategy={self.strategy} "
+            f"invariant: feature_time {op} {lt} - {format_duration(feat.embargo)} "
+            f"AND feature_time >= {lt} - {format_duration(self.lookback_td)}"
+        )
+        if self.staleness_td:
+            line += f" AND feature_time >= {lt} - {format_duration(self.staleness_td)}"
+        return line
+
+
+def _validate_build_args(
+    labels: Labels,
+    features: Sequence[Feature | FeatureSet],
+    output: str | Path | None,
+    spark: SparkSession | None,
+    *,
+    max_lookback: str | timedelta,
+    max_staleness: str | timedelta | None,
+    join: str,
+    on_missing: str,
+    strategy: str,
+    output_partition_by: str | Sequence[str] | None,
+    skew_bucket: str | timedelta | None,
+    flatten_columns: bool,
+    splits: dict[str, tuple[str, str]] | None,
+    store: Any,
+    progress: Callable[[str], None] | None,
+) -> _Build:
+    """Phase 1: parse and check every option before any Spark work."""
+    start_time = time.time()
+    strategy = resolve_strategy(strategy)
+    spark = get_spark(spark)
+    lookback_td = parse_duration(max_lookback) or timedelta(
+        days=DEFAULT_MAX_LOOKBACK_DAYS
+    )
+    staleness_td = parse_duration(max_staleness)
+    if join not in ("strict", "inclusive"):
+        raise TimefenceConfigError(f"join must be 'strict' or 'inclusive', got '{join}'.")
+    try:
+        skew_bucket_s = duration_seconds(parse_duration(skew_bucket))
+    except ValueError as exc:
+        raise TimefenceConfigError(
+            f"Invalid skew_bucket duration '{skew_bucket}': {exc}"
+        ) from exc
+    if on_missing not in ("null", "skip"):
+        raise TimefenceConfigError(
+            f"on_missing must be 'null' or 'skip', got '{on_missing}'."
+        )
+    flat_features = flatten_features(features)
+    _validate_feature_names(flat_features)
+    for feat in flat_features:
+        if feat.embargo >= lookback_td:
+            raise config_error_embargo_lookback(
+                format_duration(feat.embargo) or "0d",
+                format_duration(lookback_td) or DEFAULT_MAX_LOOKBACK,
+            )
+        if staleness_td is not None and staleness_td <= feat.embargo:
+            raise TimefenceConfigError(
+                f"max_staleness ({format_duration(staleness_td)}) must be greater "
+                f"than embargo ({format_duration(feat.embargo)}) for feature '{feat.name}'."
+            )
+    return _Build(
+        spark=spark,
+        labels=labels,
+        features=flat_features,
+        output=output,
+        lookback_td=lookback_td,
+        staleness_td=staleness_td,
+        join=join,
+        on_missing=on_missing,
+        strategy=strategy,
+        skew_bucket_s=skew_bucket_s,
+        part_list=(
+            [output_partition_by]
+            if isinstance(output_partition_by, str)
+            else list(output_partition_by or [])
+        ),
+        flatten_columns=flatten_columns,
+        splits=splits,
+        store=store,
+        progress=progress,
+        start_time=start_time,
+    )
+
+
+def _cached_build(b: _Build) -> BuildResult | None:
+    """Phase 2: the store's build-level cache probe (reference
+    engine.py:1017-1057) — a hit returns the recorded build."""
+    if b.store is None or b.output is None:
+        return None
+    cached_build = b.store.find_cached_build(
+        b.cache_key(
+            [
+                b.store.feature_cache_key(
+                    _definition_hash(feat),
+                    _content_hash_safe(feat.source.path, b.store),
+                    format_duration(feat.embargo),
+                )
+                for feat in b.features
+            ]
+        )
+    )
+    if cached_build is None:
+        return None
+    elapsed = time.time() - b.start_time
+    cached_build["duration_seconds"] = elapsed
+    out = cached_build.get("output", {})
+    return BuildResult(
+        output_path=out.get("path"),
+        manifest=cached_build,
+        stats=BuildStats(
+            row_count=out.get("row_count", 0),
+            column_count=out.get("column_count", 0),
+            feature_stats={
+                k: {
+                    "matched": v.get("matched_rows", 0),
+                    "missing": v.get("missing_rows", 0),
+                    "cached": True,
+                }
+                for k, v in cached_build.get("features", {}).items()
+            },
+            duration_seconds=elapsed,
+        ),
+        sql="-- cached build",
+    )
+
+
+def _zero_join(features: Sequence[Feature], keys: list[str], strategy: str) -> bool:
+    """Whether every feature resolves in ONE union/window pass under one
+    key mapping, so the label row can ride through it (pit_match_multi
+    carry_left) — no row id, no pin and no recombination join."""
+    key_mappings = {tuple(f.key_mapping.get(k, k) for k in keys) for f in features}
+    return (
+        bool(features)
+        and strategy == "union"
+        and len(key_mappings) == 1
+        and len(features) <= UNION_GROUP_MAX_FEATURES
+    )
+
+
+def _load_spine(
+    b: _Build, checkpoint_dir: str | Path | None
+) -> tuple[DataFrame, DataFrame, bool]:
+    """Phase 3: load the labels and decide the spine's physical plan.
+
+    A zero-join build (see :func:`_zero_join`) matches the labels as they
+    are. Any other plan recombines on a row id, pinned by localCheckpoint:
+    monotonically_increasing_id is recomputed per action and unstable
+    (SURVEY §7.3 trap 2), and persist() alone is one cache eviction or
+    executor loss away from reassigning ids mid-build. ``checkpoint_dir``
+    pins to reliable storage instead of executor-local blocks. Label
+    count and time range are not probed here: every plan keeps the spine
+    1:1 in the combined table, so they ride the build's one action.
+    Returns (labels, spine, zero_join)."""
+    b.emit("Loading labels")
+    labels_raw = load_labels_df(b.spark, b.labels)
+    lt = b.labels.label_time
+    label_cols = labels_raw.columns
+    for key in b.labels.keys:
+        if key not in label_cols:
+            raise TimefenceSchemaError(
+                f"Labels missing key column '{key}'.\n  Available: {label_cols}"
+            )
+    if lt not in label_cols:
+        raise TimefenceSchemaError(
+            f"Labels missing label_time column '{lt}'.\n  Available: {label_cols}"
+        )
+    zero_join = _zero_join(b.features, b.labels.keys, b.strategy)
+    spine = labels_raw
+    if not zero_join:
+        spine = pin(
+            labels_raw.withColumn(ROW_ID, F.monotonically_increasing_id()),
+            checkpoint_dir=_opt_str(checkpoint_dir),
+            eager=True,
+        )
+    if b.splits:
+        _validate_splits(b.splits, spine, lt)
+    return labels_raw, spine, zero_join
+
+
+def _override_shuffle_partitions(b: _Build) -> str | None:
+    """Set this build's input-bytes-derived shuffle width (see
+    :func:`_tuned_shuffle_partitions`); returns the session value to
+    restore, or None when nothing changed.
+
+    spark.sql.shuffle.partitions is session state, visible to any query
+    planned on the session while the build runs: builds are assumed one
+    at a time per SparkSession (spark.newSession() isolates concurrent
+    builds). The transcript line makes the override auditable."""
+    tuned = _tuned_shuffle_partitions(b.spark, b.labels, b.features)
+    current = b.spark.conf.get("spark.sql.shuffle.partitions")
+    if tuned is None or not current.isdigit() or tuned == int(current):
+        return None
+    b.spark.conf.set("spark.sql.shuffle.partitions", str(tuned))
+    b.transcript.append(
+        f"-- shuffle partitions tuned {current} -> {tuned} "
+        "(input-bytes-derived: shrink for tiny builds, raise "
+        "for sort-spill avoidance on big ones; session-wide "
+        "conf for this build's duration; restored after "
+        "build — one build per SparkSession; use "
+        "spark.newSession() for concurrent builds)"
+    )
+    return current
+
+
+def _feature_table(
+    b: _Build, feat: Feature, src_df: DataFrame
+) -> tuple[DataFrame, list[str]]:
+    """One feature table, read from or written to the store's feature
+    cache when a store is attached (the write is best-effort)."""
+    if b.store is None:
+        b.feature_cached[feat.name] = False
+        return _compute_feature_df(b.spark, feat, src_df)
+    fck = b.store.feature_cache_key(
+        _definition_hash(feat),
+        _content_hash_safe(feat.source.path, b.store),
+        format_duration(feat.embargo),
+    )
+    b.feature_cache_keys.append(fck)
+    cache_path = _abs(b.store.feature_cache_path(feat.name, fck))
+    b.feature_cached[feat.name] = b.store.has_feature_cache(feat.name, fck)
+    if b.feature_cached[feat.name]:
+        fdf = b.spark.read.parquet(cache_path)
+        value_cols = [
+            c for c in fdf.columns if c != "feature_time" and c not in feat.source_keys
+        ]
+        return fdf, value_cols
+    fdf, value_cols = _compute_feature_df(b.spark, feat, src_df)
+    try:
+        fdf.write.mode("overwrite").parquet(cache_path)
+        fdf = b.spark.read.parquet(cache_path)
+    except Exception as exc:
+        logger.warning("Feature cache write failed for %s: %s", feat.name, exc)
+    return fdf, value_cols
+
+
+def _feature_tables(
+    b: _Build, labels_raw: DataFrame
+) -> tuple[list[tuple[Feature, DataFrame, list[str]]], dict[str, tuple[DataFrame, Feature]]]:
+    """Phase 4: load and validate every source, plan each source's
+    duplicate check, and compute the feature tables.
+
+    A source's duplicate (key, time) groups are counted inside the match
+    window (pit_match_multi dup_track, no job of its own) when its first
+    feature provably routes through that window as a row-preserving
+    projection (union strategy, columns mode) with an orderable payload
+    (the in-window adjacency argument needs the payload tie-break), and
+    no store is attached. Every other source runs the standalone check
+    here — one action, policy in declaration order — before any side
+    effect, feature-cache writes included. Returns the
+    ``(feature, table, value_cols)`` list and the in-window sources by
+    feature name."""
+    sources = _preload_sources(b.spark, b.features)
+    standalone: list[tuple[DataFrame, Feature]] = []
+    window_dups: dict[str, tuple[DataFrame, Feature]] = {}
+    seen: set[tuple[str, tuple[str, ...], str]] = set()
+    for feat in b.features:
+        src_df = sources[feat.source.name]
+        _validate_source_schema(src_df, feat, b.labels.keys)
+        dup_key = (feat.source.name, tuple(feat.source_keys), feat.source.timestamp)
+        if dup_key in seen:
+            continue
+        seen.add(dup_key)
+        if (
+            b.store is None
+            and b.strategy == "union"
+            and feat.mode == "columns"
+            and _payload_orderable(src_df, list(feat._columns))
+        ):
+            window_dups[feat.name] = (src_df, feat)
+        else:
+            standalone.append((src_df, feat))
+    if standalone:
+        b.emit(f"Checking {len(standalone)} source(s) for duplicates")
+        _batch_duplicate_checks(standalone)
+
+    label_dtype = labels_raw.schema[b.labels.label_time].dataType
+    tables: list[tuple[Feature, DataFrame, list[str]]] = []
+    for i, feat in enumerate(b.features, 1):
+        b.emit(f"Computing {feat.name} ({i}/{len(b.features)})")
+        fdf, value_cols = _feature_table(b, feat, sources[feat.source.name])
+        if value_cols:
+            _validate_timezones(label_dtype, fdf, feat, labels_raw, b.labels.label_time)
+        tables.append((feat, fdf, value_cols))
+        b.transcript.append(b.invariant(feat))
+    return tables, window_dups
+
+
+@dataclass
+class _Matched:
+    """The match phase's output: the label rows with every feature's
+    matched columns, plus what the later phases read back."""
+
+    combined: DataFrame
+    # feature name -> the DataFrame whose plan holds its as-of join
+    # (BuildResult.physical_plans summarizes these on demand)
+    plans: dict[str, DataFrame]
+    # per union group: (Observation of dups_{i}, [(i, feature name)])
+    dup_observations: list[tuple[Observation, list[tuple[int, str]]]]
+    # tracked feature name -> Observation of its NULL-key/NULL-time rows
+    null_observations: dict[str, Observation]
+    transcript: str
+
+
+def _match(
+    spine: DataFrame,
+    tables: Sequence[tuple[Feature, DataFrame, list[str]]],
+    keys: list[str],
+    label_time: str,
+    *,
+    lookback_s: int | None,
+    staleness_s: int | None,
+    strict: bool,
+    zero_join: bool,
+    strategy: str = "union",
+    bucket_s: int | None = None,
+    dup_track: Collection[str] = (),
+    prefix: str = "",
+    emit: Callable[[str], None] = lambda msg: None,
+) -> _Matched:
+    """Phase 5 (shared by build and the rebuild audit): match every
+    feature table against the spine and recombine.
+
+    Union features sharing an entity-key mapping resolve in ONE
+    union/window pass per chunk of ``UNION_GROUP_MAX_FEATURES``
+    (pit_match_multi): the spine and the feature tables shuffle once by
+    key into a single Window operator. With ``zero_join`` the label row
+    rides through that pass and nothing recombines; otherwise every group
+    (or, for ``strategy='join'``, every feature's range join) is keyed on
+    the spine's ROW_ID and left-joined back. Output columns are
+    ``{prefix}{feature}__{col}``. Features named in ``dup_track`` count
+    their duplicate (key, time) groups inside the window and observe the
+    NULL-key/NULL-time rows of their table, which the window never sees."""
+    plans: dict[str, DataFrame] = {}
+    joined: list[DataFrame] = []
+    groups: dict[tuple[tuple[str, str], ...], list] = {}
+    for feat, fdf, value_cols in tables:
+        key_pairs = tuple((k, feat.key_mapping.get(k, k)) for k in keys)
+        if strategy == "union":
+            groups.setdefault(key_pairs, []).append((feat, fdf, value_cols))
+            continue
+        emit(f"Joining {feat.name}")
+        plans[feat.name] = pit_match(
+            spine,
+            fdf,
+            key_pairs=list(key_pairs),
+            label_time=label_time,
+            value_cols=value_cols,
+            prefix=prefix + feat.name,
+            embargo_s=duration_seconds(feat.embargo) or 0,
+            lookback_s=lookback_s,
+            staleness_s=staleness_s,
+            strict=strict,
+            strategy=strategy,
+        )
+        joined.append(plans[feat.name])
+
+    chunks = [
+        (kp, group[i : i + UNION_GROUP_MAX_FEATURES])
+        for kp, group in groups.items()
+        for i in range(0, len(group), UNION_GROUP_MAX_FEATURES)
+    ]
+    dup_observations: list[tuple[Observation, list[tuple[int, str]]]] = []
+    null_observations: dict[str, Observation] = {}
+    for kp, chunk in chunks:
+        emit("Joining " + ", ".join(feat.name for feat, _, _ in chunk) + " (single-pass)")
+        specs = []
+        track = [feat.name in dup_track for feat, _, _ in chunk]
+        for (feat, fdf, value_cols), tracked_here in zip(chunk, track):
+            if tracked_here:
+                null_observations[feat.name] = Observation()
+                fdf = fdf.observe(
+                    null_observations[feat.name],
+                    F.count(F.when(_null_key_or_time(feat, "feature_time"), 1)).alias("n"),
+                )
+            specs.append(
+                (
+                    prefix + feat.name,
+                    fdf,
+                    "feature_time",
+                    value_cols,
+                    duration_seconds(feat.embargo) or 0,
+                )
+            )
+        dup_obs = Observation() if any(track) else None
+        if dup_obs is not None:
+            dup_observations.append(
+                (dup_obs, [(fi, chunk[fi][0].name) for fi, t in enumerate(track) if t])
+            )
+        gout = pit_match_multi(
+            spine,
+            specs,
+            key_pairs=list(kp),
+            label_time=label_time,
+            lookback_s=lookback_s,
+            staleness_s=staleness_s,
+            strict=strict,
+            carry_left=zero_join,
+            dup_track=track,
+            dup_observation=dup_obs,
+            bucket_s=bucket_s,
+        )
+        joined.append(gout)
+        plans.update({feat.name: gout for feat, _, _ in chunk})
+
+    if zero_join:
+        combined = joined[0]
+        line = "-- recombine: none (zero-join single-pass plan)"
+    else:
+        combined = spine
+        for df in joined:
+            combined = combined.join(df, ROW_ID, "left")
+        line = (
+            f"-- recombine: {len(joined)}-way left join on {ROW_ID} "
+            f"({len(chunks)} single-pass union group(s))"
+        )
+    return _Matched(combined, plans, dup_observations, null_observations, line)
+
+
+def _stats_aggs(
+    b: _Build, tables: Sequence[tuple[Feature, DataFrame, list[str]]]
+) -> tuple[list[F.Column], F.Column | None, list[str]]:
+    """Everything a build reports, as ONE set of aggregates over the
+    combined table: spine row count and label-time range (combined is 1:1
+    with the spine), the output row count under on_missing, per-feature
+    NULL counts (``n_{i}`` over the features with value columns), and the
+    post-build temporal verification (``v_{feature}``, reference
+    engine.py:1342-1384). Returns (aggs, on_missing='skip' row filter,
+    output value columns)."""
+    lt = F.col(b.labels.label_time)
+    value_cols = [f"{feat.name}__{c}" for feat, _, vcols in tables for c in vcols]
+    skip = None
+    if b.on_missing == "skip":
+        for c in value_cols:
+            skip = F.col(c).isNotNull() if skip is None else skip & F.col(c).isNotNull()
+    aggs = [
+        F.count(F.lit(1)).alias("__n_labels"),
+        F.min(lt).alias("__mn"),
+        F.max(lt).alias("__mx"),
+        F.count(F.when(skip, 1) if skip is not None else F.lit(1)).alias("__n_result"),
+    ]
+    firsts = [f"{feat.name}__{vcols[0]}" for feat, _, vcols in tables if vcols]
+    for i, c in enumerate(firsts):
+        missing = F.col(c).isNull() if skip is None else skip & F.col(c).isNull()
+        aggs.append(F.count(F.when(missing, 1)).alias(f"n_{i}"))
+    for feat, _, _ in tables:
+        ft = F.col(f"{feat.name}__feature_time")
+        embargo_s = duration_seconds(feat.embargo) or 0
+        bound = lt - F.make_dt_interval(secs=F.lit(embargo_s)) if embargo_s else lt
+        viol = (ft >= bound) if b.join == "strict" else (ft > bound)
+        aggs.append(
+            F.count(F.when(ft.isNotNull() & viol, 1)).alias(f"v_{safe_name(feat.name)}")
+        )
+    return aggs, skip, value_cols
+
+
+def _apply_window_dup_policy(
+    m: _Matched, window_dups: dict[str, tuple[DataFrame, Feature]]
+) -> None:
+    """on_duplicate for the sources counted inside the match window, once
+    the build's action has run. Their NULL-key/NULL-time rows are
+    aggregated only where the feature table's observation saw some (or
+    is unavailable), so clean sources pay no job at all. Without the
+    window counts (CollectMetrics optimized away in a degenerate plan)
+    the standalone check applies the policy."""
+    counts: dict[str, int] = {}
+    for obs, tracked in m.dup_observations:
+        vals = _observation_get(obs)
+        if vals is None:
+            logger.info(
+                "in-window duplicate metrics unavailable; falling back to "
+                "the standalone duplicate check"
+            )
+            _batch_duplicate_checks(list(window_dups.values()))
+            return
+        counts.update({name: int(vals.get(f"dups_{fi}") or 0) for fi, name in tracked})
+    with_nulls = []
+    for name in window_dups:
+        vals = _observation_get(m.null_observations[name])
+        if vals is None or vals["n"] > 0:
+            with_nulls.append(name)
+    null_counts = _batch_duplicate_checks([], [window_dups[n] for n in with_nulls])
+    counts_null = dict(zip(with_nulls, null_counts))
+    for name, (src_df, feat) in window_dups.items():
+        _apply_dup_policy(src_df, feat, counts.get(name, 0) + counts_null.get(name, 0))
+
+
+def _write_splits(b: _Build, result: DataFrame) -> dict[str, Path] | None:
+    """Each split is a disjoint label_time filter over the sorted result
+    (persisted by the caller); the writes run as concurrent Spark actions,
+    so two splits cost about one write's wall clock."""
+    if not b.splits or not b.output:
+        return None
+    output_path = Path(str(b.output))
+    lt = b.labels.label_time
+    # label_time survives flatten unchanged: it never carries a prefix.
+    ts_type = result.schema[lt].dataType
+
+    def _write_split(item):
+        split_name, (start, end) = item
+        split_file = (
+            output_path.parent
+            / f"{output_path.stem}_{split_name}{output_path.suffix or '.parquet'}"
+        )
+        split_df = result.where(
+            (F.col(lt) >= F.lit(start).cast(ts_type))
+            & (F.col(lt) < F.lit(end).cast(ts_type))
+        )
+        _write_output(split_df, split_file)
+        return split_name, split_file
+
+    with ThreadPoolExecutor(max_workers=min(4, len(b.splits))) as pool:
+        return dict(pool.map(_write_split, b.splits.items()))
+
+
+def _write_and_verify(
+    b: _Build,
+    m: _Matched,
+    tables: Sequence[tuple[Feature, DataFrame, list[str]]],
+    window_dups: dict[str, tuple[DataFrame, Feature]],
+) -> tuple[DataFrame, dict[str, Any], dict[str, Path] | None]:
+    """Phase 6: project and sort the output, run the build's ONE action —
+    the write into a staging path next to ``output`` with the stats
+    observed on it, or the stats aggregation when ``output`` is None —
+    then apply the in-window duplicate policy, and only then replace
+    ``output`` and write the splits. A failure before the commit removes
+    the staging path and leaves an earlier output untouched. Returns
+    (result, stats, split paths)."""
+    lt = b.labels.label_time
+    aggs, skip, value_cols = _stats_aggs(b, tables)
+    observation = Observation() if b.output is not None else None
+    result = m.combined.observe(observation, *aggs) if observation else m.combined
+    if skip is not None:
+        result = result.where(skip)
+    result = result.select(*b.labels.keys, lt, *b.labels.target, *value_cols)
+    if b.flatten_columns:  # reference engine.py:1281-1304
+        shorts = [c.split("__", 1)[1] if "__" in c else c for c in result.columns]
+        if len(set(shorts)) == len(shorts):
+            result = result.toDF(*shorts)
+    # The final ORDER BY range-partitions, and the range partitioner
+    # SAMPLES its child before the shuffle pass: without a cache below
+    # the sort the match would run twice per write and every observation
+    # would double-count. With splits, the sorted result is persisted
+    # too, so each split write is a cached scan and the sort runs once.
+    caches: list[DataFrame] = []
+    if b.output is not None:
+        result = result.persist()
+        caches.append(result)
+    result = result.orderBy(*b.labels.keys, lt)
+    if b.splits and b.output is not None:
+        result = result.persist()
+        caches.append(result)
+    try:
+        b.emit("Writing output")
+        part_cols = b.part_list or None
+        if part_cols:
+            if str(b.output or "").endswith((".parquet", ".pq")):
+                raise TimefenceConfigError(
+                    "output_partition_by writes a partitioned parquet "
+                    "directory; pass a directory path for 'output', not a "
+                    f"'.parquet' file ({b.output})."
+                )
+            missing = [c for c in part_cols if c not in result.columns]
+            if missing:
+                raise TimefenceConfigError(
+                    f"output_partition_by columns not in output: {missing}. "
+                    f"Available: {result.columns}"
+                )
+        b.emit("Verifying temporal correctness")
+        staging = _staging_path(b.output) if b.output is not None else None
+        try:
+            stats = None
+            if b.output is not None:
+                _stage_output(result, b.output, staging, part_cols)
+                stats = _observation_get(observation)
+            if stats is None:
+                # output=None, or the optimizer removed the CollectMetrics
+                # node (degenerate builds, which are the cheap ones).
+                stats = m.combined.agg(*aggs).first().asDict()
+            _apply_window_dup_policy(m, window_dups)
+        except BaseException:
+            _remove_path(staging)
+            raise
+        if b.output is not None:
+            _commit_output(staging, b.output, part_cols)
+        return result, stats, _write_splits(b, result)
+    finally:
+        for cache in reversed(caches):
+            cache.unpersist()
+
+
+def _build_result(
+    b: _Build,
+    result: DataFrame,
+    stats_map: dict[str, Any],
+    split_paths: dict[str, Path] | None,
+    tables: Sequence[tuple[Feature, DataFrame, list[str]]],
+    plans: dict[str, DataFrame],
+) -> BuildResult:
+    """Phase 7: stats, the manifest (saved to the store when one is
+    attached) and the BuildResult."""
+    lt = b.labels.label_time
+    label_count = int(stats_map["__n_labels"])
+    result_count = int(stats_map["__n_result"])
+    feature_stats: dict[str, dict[str, Any]] = {}
+    for i, (feat, _, _) in enumerate(t for t in tables if t[2]):
+        null_count = int(stats_map[f"n_{i}"])
+        feature_stats[feat.name] = {
+            "matched": result_count - null_count,
+            "missing": null_count,
+            "cached": b.feature_cached.get(feat.name, False),
+        }
+    audit_passed = all(
+        int(stats_map[f"v_{safe_name(feat.name)}"] or 0) == 0 for feat, _, _ in tables
+    )
+    elapsed = time.time() - b.start_time
+    column_count = len(result.columns)
+    output_file_size = None
+    if b.output is not None:
+        p = Path(str(b.output))
+        if p.is_file():
+            output_file_size = p.stat().st_size
+        elif p.is_dir():
+            output_file_size = sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
+
+    manifest: dict[str, Any] = {
+        "timefence_spark_version": __version__,
+        "build_id": datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%SZ"),
+        "created_at": datetime.now(timezone.utc).isoformat(),
+        "duration_seconds": elapsed,
+        "labels": {
+            "path": str(b.labels.path) if b.labels.path else None,
+            "content_hash": _content_hash_safe(b.labels.path, b.store),
+            "row_count": label_count,
+            "time_range": (
+                [str(stats_map["__mn"]), str(stats_map["__mx"])]
+                if stats_map["__mn"] is not None
+                else None
+            ),
+            "keys": b.labels.keys,
+            "label_time_column": lt,
+            "target_columns": b.labels.target,
+        },
+        "features": {
+            feat.name: {
+                "definition_hash": _definition_hash(feat),
+                "source_content_hash": _content_hash_safe(feat.source.path, b.store),
+                "embargo": format_duration(feat.embargo),
+                "matched_rows": feature_stats.get(feat.name, {}).get("matched", 0),
+                "missing_rows": feature_stats.get(feat.name, {}).get("missing", 0),
+                "output_columns": value_cols,
+                "strategy": b.strategy,
+                "cached": b.feature_cached.get(feat.name, False),
+            }
+            for feat, _, value_cols in tables
+        },
+        "parameters": {
+            "max_lookback": format_duration(b.lookback_td),
+            "max_staleness": format_duration(b.staleness_td),
+            "join": b.join,
+            "on_missing": b.on_missing,
+        },
+        "output": {
+            "path": str(b.output) if b.output else None,
+            "content_hash": _content_hash_safe(
+                Path(str(b.output)) if b.output else None, b.store
+            ),
+            "row_count": result_count,
+            "column_count": column_count,
+            "file_size_bytes": output_file_size,
+        },
+        "audit": {
+            "passed": audit_passed,
+            "invariant": (
+                f"feature_time {'<' if b.join == 'strict' else '<='} "
+                "label_time - embargo"
+            ),
+            "rows_checked": result_count,
+        },
+        "environment": {
+            "python_version": _python_version(),
+            "spark_version": b.spark.version,
+            "os": "spark-local",
+        },
+    }
+    if b.store is not None and b.feature_cache_keys:
+        manifest["build_cache_key"] = b.cache_key(b.feature_cache_keys)
+        manifest["manifest_path"] = str(b.store.save_build(manifest))
+
+    spine_line = (
+        f"-- spine: {label_count} label rows, keys={b.labels.keys}, label_time={lt}"
+    )
+    return BuildResult(
+        output_path=str(b.output) if b.output else None,
+        manifest=manifest,
+        stats=BuildStats(
+            row_count=result_count,
+            column_count=column_count,
+            feature_stats=feature_stats,
+            duration_seconds=elapsed,
+        ),
+        splits=split_paths,
+        sql="\n\n".join([spine_line, *b.transcript]),
+        dataframe=result,
+        matched=plans,
+    )
+
+
 def build(
     labels: Labels,
     features: Sequence[Feature | FeatureSet],
@@ -647,885 +1433,72 @@ def build(
 ) -> BuildResult:
     """Build a point-in-time correct training set.
 
-    Lifecycle parity with reference build() (engine.py:933-1500); Spark
-    extras: ``spark`` (session), ``strategy`` ('auto' | 'join' | 'union'
-    as-of plan selection; 'auto' is 'union', and 'join' broadcasts a
-    feature table whose Catalyst size estimate is small),
-    ``output_partition_by`` (write the output as a Hive-partitioned
-    parquet directory keyed by these columns — the 100 TB output path:
-    readers get partition pruning, and no single-file coalesce bottleneck;
-    requires a directory-style ``output``, not a ``.parquet`` file path),
-    ``skew_bucket`` (duration, e.g. "30d": split hot entity keys into time
-    buckets of this width inside the union as-of plan, bounding any single
-    sort partition — see operators/asof.pit_match_multi),
-    ``checkpoint_dir`` (pin the spine's row ids to RELIABLE storage instead
-    of executor-local blocks — survives executor loss on long cluster
-    builds; see timefence_spark._checkpoint and docs/concepts/scale.md).
+    Lifecycle parity with reference build() (engine.py:933-1500), as seven
+    phases: validate args → store cache probe → load spine → sources,
+    duplicate checks and feature tables → match → write, observe and
+    verify → manifest. The output is written to a staging path next to
+    ``output`` and renamed into place only after every check passed, so a
+    failed build leaves an earlier output intact. Spark extras: ``spark``
+    (session), ``strategy`` ('auto' | 'join' | 'union' as-of plan
+    selection; 'auto' is 'union', and 'join' broadcasts a feature table
+    whose Catalyst size estimate is small), ``output_partition_by`` (write
+    the output as a Hive-partitioned parquet directory keyed by these
+    columns — the 100 TB output path: readers get partition pruning, and
+    no single-file coalesce bottleneck; requires a directory-style
+    ``output``, not a ``.parquet`` file path), ``skew_bucket`` (duration,
+    e.g. "30d": split hot entity keys into time buckets of this width
+    inside the union as-of plan, bounding any single sort partition — see
+    operators/asof.pit_match_multi), ``checkpoint_dir`` (pin the spine's
+    row ids to RELIABLE storage instead of executor-local blocks —
+    survives executor loss on long cluster builds; see
+    timefence_spark._checkpoint and docs/concepts/scale.md).
     """
-    start_time = time.time()
-    strategy = resolve_strategy(strategy)
-    spark = get_spark(spark)
-
-    def _emit(msg: str) -> None:
-        if progress is not None:
-            progress(msg)
-
-    max_lookback_td = parse_duration(max_lookback) or timedelta(
-        days=DEFAULT_MAX_LOOKBACK_DAYS
+    b = _validate_build_args(
+        labels,
+        features,
+        output,
+        spark,
+        max_lookback=max_lookback,
+        max_staleness=max_staleness,
+        join=join,
+        on_missing=on_missing,
+        strategy=strategy,
+        output_partition_by=output_partition_by,
+        skew_bucket=skew_bucket,
+        flatten_columns=flatten_columns,
+        splits=splits,
+        store=store,
+        progress=progress,
     )
-    max_staleness_td = parse_duration(max_staleness)
-
-    if join not in ("strict", "inclusive"):
-        raise TimefenceConfigError(f"join must be 'strict' or 'inclusive', got '{join}'.")
+    cached = _cached_build(b)
+    if cached is not None:
+        return cached
+    labels_raw, spine, zero_join = _load_spine(b, checkpoint_dir)
+    saved_shuffle_conf = _override_shuffle_partitions(b)
     try:
-        skew_bucket_s = duration_seconds(parse_duration(skew_bucket))
-    except ValueError as exc:
-        raise TimefenceConfigError(
-            f"Invalid skew_bucket duration '{skew_bucket}': {exc}"
-        ) from exc
-    if on_missing not in ("null", "skip"):
-        raise TimefenceConfigError(
-            f"on_missing must be 'null' or 'skip', got '{on_missing}'."
+        tables, window_dups = _feature_tables(b, labels_raw)
+        m = _match(
+            spine,
+            tables,
+            b.labels.keys,
+            b.labels.label_time,
+            lookback_s=duration_seconds(b.lookback_td),
+            staleness_s=duration_seconds(b.staleness_td),
+            strict=b.join == "strict",
+            zero_join=zero_join,
+            strategy=b.strategy,
+            bucket_s=b.skew_bucket_s,
+            dup_track=window_dups,
+            emit=b.emit,
         )
-
-    flat_features = flatten_features(features)
-    _validate_feature_names(flat_features)
-
-    for feat in flat_features:
-        if feat.embargo >= max_lookback_td:
-            raise config_error_embargo_lookback(
-                format_duration(feat.embargo) or "0d",
-                format_duration(max_lookback_td) or DEFAULT_MAX_LOOKBACK,
-            )
-        if max_staleness_td is not None and max_staleness_td <= feat.embargo:
-            raise TimefenceConfigError(
-                f"max_staleness ({format_duration(max_staleness_td)}) must be greater "
-                f"than embargo ({format_duration(feat.embargo)}) for feature '{feat.name}'."
-            )
-
-    part_list = (
-        [output_partition_by]
-        if isinstance(output_partition_by, str)
-        else list(output_partition_by or [])
-    )
-    output_spec = (
-        f"{_abs(str(output))}:{sorted(part_list)}:{flatten_columns}"
-        if output is not None
-        else ""
-    )
-
-    # Build-level cache probe (reference engine.py:1017-1057)
-    if store is not None and output is not None:
-        label_hash = _content_hash_safe(labels.path, store)
-        feat_cache_keys = [
-            store.feature_cache_key(
-                _definition_hash(feat),
-                _content_hash_safe(feat.source.path, store),
-                format_duration(feat.embargo),
-            )
-            for feat in flat_features
-        ]
-        bck = store.build_cache_key(
-            label_hash,
-            feat_cache_keys,
-            format_duration(max_lookback_td),
-            format_duration(max_staleness_td),
-            join,
-            on_missing,
-            output_spec,
-        )
-        cached_build = store.find_cached_build(bck)
-        if cached_build is not None:
-            elapsed = time.time() - start_time
-            cached_build["duration_seconds"] = elapsed
-            return BuildResult(
-                output_path=cached_build.get("output", {}).get("path"),
-                manifest=cached_build,
-                stats=BuildStats(
-                    row_count=cached_build.get("output", {}).get("row_count", 0),
-                    column_count=cached_build.get("output", {}).get("column_count", 0),
-                    feature_stats={
-                        k: {
-                            "matched": v.get("matched_rows", 0),
-                            "missing": v.get("missing_rows", 0),
-                            "cached": True,
-                        }
-                        for k, v in cached_build.get("features", {}).items()
-                    },
-                    duration_seconds=elapsed,
-                ),
-                sql="-- cached build",
-            )
-
-    transcript: list[str] = []
-    lt = labels.label_time
-
-    # ---- Step 1: labels -> spine with pinned row id --------------------
-    _emit("Loading labels")
-    labels_raw = load_labels_df(spark, labels)
-    label_cols = labels_raw.columns
-    for key in labels.keys:
-        if key not in label_cols:
-            raise TimefenceSchemaError(
-                f"Labels missing key column '{key}'.\n  Available: {label_cols}"
-            )
-    if lt not in label_cols:
-        raise TimefenceSchemaError(
-            f"Labels missing label_time column '{lt}'.\n  Available: {label_cols}"
-        )
-
-    # Physical spine plan, decided up front: when EVERY feature resolves
-    # through the union strategy under ONE shared key mapping (the common
-    # case), the label row rides through the single-pass window itself
-    # (pit_match_multi carry_left) — no row id, no checkpoint, and no
-    # recombination join exist at all, so there is nothing to pin.
-    key_mappings = {
-        tuple((lk, f.key_mapping.get(lk, lk)) for lk in labels.keys)
-        for f in flat_features
-    }
-    zero_join = (
-        bool(flat_features)
-        and strategy == "union"
-        and len(key_mappings) == 1
-        and len(flat_features) <= UNION_GROUP_MAX_FEATURES
-    )
-    if zero_join:
-        spine = labels_raw
-    else:
-        spine = labels_raw.withColumn(ROW_ID, F.monotonically_increasing_id())
-        # localCheckpoint pins the row id by materializing the partitions
-        # and TRUNCATING lineage: monotonically_increasing_id is otherwise
-        # recomputed per action and unstable (SURVEY §7.3 trap 2). persist()
-        # alone is not enough at scale — cache eviction under memory
-        # pressure or an executor loss silently recomputes the ids
-        # mid-build, which can reassign them between the matched-feature
-        # tables and the rowid-keyed recombination join (reference
-        # engine.py:1087-1090, 1231-1257 relies on stable ids the same
-        # way). With a checkpoint there is no lineage to recompute from:
-        # downstream stages read the materialized blocks or fail fast.
-        # Blocks are freed when the DataFrame is GC'd. checkpoint_dir
-        # upgrades the pin to reliable storage (executor-loss-proof).
-        spine = pin(spine, checkpoint_dir=_opt_str(checkpoint_dir), eager=True)
-    # Label count and time range are NOT probed here: every build path
-    # keeps the spine 1:1 in the combined table (carry_left emits one row
-    # per label row; the recombination joins are left joins on a unique
-    # row id), so they ride in the single post-write aggregation over the
-    # persisted combined table (step 5/6) instead of paying a dedicated
-    # Spark job per build — and the manifest stats then describe the SAME
-    # materialization the output was written from, which also holds for
-    # nondeterministically-derived in-memory label DataFrames.
-    spine_transcript_idx = len(transcript)
-    transcript.append("")  # filled with the spine stats line after the agg
-
-    label_dtype = spine.schema[lt].dataType
-
-    if splits:
-        _validate_splits(splits, spine, lt)
-
-    saved_shuffle_conf: str | None = None
-    try:
-        # ---- Shuffle-partition auto-tuning for small inputs ------------
-        # (VERDICT r9 item 7) A 100k-label build through 32 shuffle
-        # partitions pays ~32 near-empty sort/write tasks per stage —
-        # pure scheduling overhead at tiny scale. When every input is a
-        # sizeable file path, scale the build's shuffle width to the
-        # bytes actually read (one partition per ~4 MB of parquet,
-        # floor 4) and restore the session conf afterwards. Inputs past
-        # the session's configured width, or any DataFrame-backed
-        # source (unsized without a job), leave the conf untouched.
-        # Measured at local[32]: 100k_x1 1.36->1.03s, 100k_x10
-        # 4.5->3.7s, 1m_x1 2.7->2.4s, 1m_x10+ unchanged (capped).
-        #
-        # SCOPE (ADVICE r10): spark.sql.shuffle.partitions is session
-        # state, so the override is visible to ANY query planned on this
-        # SparkSession while the build runs, and two interleaved builds
-        # on one session could restore each other's value out of order.
-        # builds are assumed one-at-a-time per SparkSession (the engine
-        # holds no other session-wide conf); run concurrent builds on
-        # separate sessions (spark.newSession() gives an isolated conf
-        # with a shared SparkContext). The transcript line below makes
-        # the override auditable per build.
-        tuned = _tuned_shuffle_partitions(spark, labels, flat_features)
-        if tuned is not None:
-            current = spark.conf.get("spark.sql.shuffle.partitions")
-            if current.isdigit() and tuned != int(current):
-                saved_shuffle_conf = current
-                spark.conf.set("spark.sql.shuffle.partitions", str(tuned))
-                transcript.append(
-                    f"-- shuffle partitions tuned {current} -> {tuned} "
-                    "(input-bytes-derived: shrink for tiny builds, raise "
-                    "for sort-spill avoidance on big ones; session-wide "
-                    "conf for this build's duration; restored after "
-                    "build — one build per SparkSession; use "
-                    "spark.newSession() for concurrent builds)"
-                )
-
-        # ---- Step 2: sources + feature tables --------------------------
-        registered_sources: dict[str, DataFrame] = {}
-        feature_tables: dict[str, tuple[DataFrame, list[str]]] = {}
-        feature_cache_keys: list[str] = []
-        feature_cache_status: dict[str, bool] = {}
-        dup_checked: set[tuple[str, tuple[str, ...], str]] = set()
-
-        # Pre-pass: load + validate every source, then run ALL duplicate
-        # checks as one batched Spark action (see _batch_duplicate_checks)
-        # — still before any materialization, so bad sources fail fast.
-        # Thread-safe sources load in parallel (see _preload_sources);
-        # validation stays on the main thread, in declaration order, so
-        # error messages are deterministic.
-        from concurrent.futures import ThreadPoolExecutor
-
-        registered_sources.update(_preload_sources(spark, flat_features))
-        pending_checks: list[tuple[str, DataFrame, Feature]] = []
-        null_subset_checks: list[tuple[str, DataFrame, Feature]] = []
-        # Sources whose duplicate count rides the build's window pass
-        # (pit_match_multi dup_track): designated feature name ->
-        # (null-subset tag, source df, feature). Eligibility = the
-        # feature provably routes through pit_match_multi (build-level
-        # union strategy) as a row-preserving projection of its source
-        # (columns mode) with an orderable payload (the in-window
-        # adjacency argument needs the payload tie-break columns in the
-        # sort), and no store is attached (feature-cache writes must keep
-        # the classic check-then-materialize ordering).
-        window_dup_feats: dict[str, tuple[str, DataFrame, Feature]] = {}
-        null_dup_results: dict[str, int] = {}
-        for feat in flat_features:
-            src_name = feat.source.name
-            if src_name not in registered_sources:
-                registered_sources[src_name] = load_source_df(spark, feat.source)
-            _validate_source_schema(registered_sources[src_name], feat, labels.keys)
-            dup_key = (src_name, tuple(feat.source_keys), feat.source.timestamp)
-            if dup_key not in dup_checked:
-                dup_checked.add(dup_key)
-                src_df = registered_sources[src_name]
-                in_window = (
-                    store is None
-                    and strategy == "union"
-                    and feat.mode == "columns"
-                    and _payload_orderable(src_df, list(feat._columns))
-                )
-                if in_window:
-                    tag = f"n{len(null_subset_checks)}"
-                    null_subset_checks.append((tag, src_df, feat))
-                    window_dup_feats[feat.name] = (tag, src_df, feat)
-                else:
-                    pending_checks.append(
-                        (f"c{len(pending_checks)}", src_df, feat)
-                    )
-
-        # The duplicate-check action runs on a BACKGROUND thread while the
-        # main thread builds feature tables and join plans (driver-side
-        # Catalyst work): the collect costs ~1s of the ~5s total at the
-        # 100K-label scale, and nothing before the first materialization
-        # needs its result. _resolve_dup_checks() joins the thread — and
-        # raises any TimefenceDuplicateError — before any side effect
-        # (feature-cache write, output write), so the fail-fast contract
-        # is ordering-identical where it matters.
-        dup_future = None
-        dup_pool = None
-        if pending_checks or null_subset_checks:
-            _emit(
-                f"Checking {len(pending_checks)} source(s) for duplicates"
-                + (
-                    f" ({len(null_subset_checks)} in-window, NULL subset only)"
-                    if null_subset_checks
-                    else ""
-                )
-            )
-            dup_pool = ThreadPoolExecutor(max_workers=1)
-            dup_future = dup_pool.submit(
-                _batch_duplicate_checks, pending_checks, null_subset_checks
-            )
-
-        def _resolve_dup_checks() -> None:
-            nonlocal dup_future
-            if dup_future is not None:
-                fut, dup_future = dup_future, None
-                try:
-                    null_dup_results.update(fut.result())
-                finally:
-                    dup_pool.shutdown(wait=False)
-
-        if store is not None:
-            # Feature-cache writes below are materializations; keep the
-            # classic strict ordering when a store is attached.
-            _resolve_dup_checks()
-
-        for i, feat in enumerate(flat_features, 1):
-            _emit(f"Computing {feat.name} ({i}/{len(flat_features)})")
-            src_df = registered_sources[feat.source.name]
-
-            cached = False
-            fck = None
-            if store is not None:
-                src_hash = _content_hash_safe(feat.source.path, store)
-                fck = store.feature_cache_key(
-                    _definition_hash(feat), src_hash, format_duration(feat.embargo)
-                )
-                feature_cache_keys.append(fck)
-                if store.has_feature_cache(feat.name, fck):
-                    cache_path = store.feature_cache_path(feat.name, fck)
-                    fdf = spark.read.parquet(_abs(cache_path))
-                    value_cols = [
-                        c
-                        for c in fdf.columns
-                        if c != "feature_time" and c not in feat.source_keys
-                    ]
-                    feature_tables[feat.name] = (fdf, value_cols)
-                    cached = True
-                    feature_cache_status[feat.name] = True
-
-            if not cached:
-                feature_cache_status[feat.name] = False
-                fdf, value_cols = _compute_feature_df(spark, feat, src_df)
-                if store is not None and fck is not None:
-                    cache_path = store.feature_cache_path(feat.name, fck)
-                    try:
-                        fdf.write.mode("overwrite").parquet(_abs(cache_path))
-                        fdf = spark.read.parquet(_abs(cache_path))
-                    except Exception as exc:  # cache write is best-effort
-                        logger.warning(
-                            "Feature cache write failed for %s: %s", feat.name, exc
-                        )
-                feature_tables[feat.name] = (fdf, value_cols)
-
-            if feature_tables[feat.name][1]:
-                _validate_timezones(
-                    label_dtype, feature_tables[feat.name][0], feat, labels_raw, lt
-                )
-
-        # ---- Step 3: point-in-time joins -------------------------------
-        # Union-strategy features that share an entity-key mapping resolve
-        # in ONE union/window pass (pit_match_multi): the spine and every
-        # feature table shuffle once by key into a single Window operator,
-        # instead of one spine shuffle + window + recombination join per
-        # feature (skew buckets included). Only the join strategy keeps the
-        # per-feature path.
-        matched: dict[str, DataFrame] = {}
-        physical_plans: dict[str, str] = {}
-        # Plan probes (physical_summary → manifest) force a full Catalyst
-        # physical planning of each join output — ~0.5-1s of driver time
-        # for a 10-feature single-pass group, separate from the planning
-        # the write itself performs. They run on background threads (py4j
-        # releases the GIL during JVM calls, so they genuinely overlap)
-        # and are joined after the output write.
-        plan_probe_pool = ThreadPoolExecutor(max_workers=2)
-        plan_probe_futures: list[tuple[list[str], Any]] = []
-
-        def _probe_plan(df: DataFrame) -> str:
-            try:
-                from timefence_spark.plans import physical_summary
-
-                return str(physical_summary(df))
-            except Exception:  # plan probe must never fail a build
-                return ""
-
-        def _submit_plan_probe(names: list[str], df: DataFrame) -> None:
-            plan_probe_futures.append(
-                (names, plan_probe_pool.submit(_probe_plan, df))
-            )
-
-        def _resolve_plan_probes() -> None:
-            for names, fut in plan_probe_futures:
-                try:
-                    summary = fut.result()
-                except Exception:
-                    summary = ""
-                for fname in names:
-                    physical_plans[fname] = summary
-            plan_probe_futures.clear()
-            plan_probe_pool.shutdown(wait=False)
-        union_groups: dict[tuple, list[Feature]] = {}
-        op = "<" if join == "strict" else "<="
-        for i, feat in enumerate(flat_features, 1):
-            fdf, value_cols = feature_tables[feat.name]
-            key_pairs = [(lk, feat.key_mapping.get(lk, lk)) for lk in labels.keys]
-            transcript.append(
-                f"-- pit_match[{feat.name}] strategy={strategy} "
-                f"invariant: feature_time {op} {lt} - {format_duration(feat.embargo)} "
-                f"AND feature_time >= {lt} - {format_duration(max_lookback_td)}"
-                + (
-                    f" AND feature_time >= {lt} - {format_duration(max_staleness_td)}"
-                    if max_staleness_td
-                    else ""
-                )
-            )
-            if strategy == "union":
-                union_groups.setdefault(tuple(key_pairs), []).append(feat)
-                continue
-            _emit(f"Joining {feat.name} ({i}/{len(flat_features)})")
-            matched[feat.name] = pit_match(
-                spine,
-                fdf,
-                key_pairs=key_pairs,
-                label_time=lt,
-                value_cols=value_cols,
-                prefix=feat.name,
-                embargo_s=duration_seconds(feat.embargo) or 0,
-                lookback_s=duration_seconds(max_lookback_td),
-                staleness_s=duration_seconds(max_staleness_td),
-                strict=(join == "strict"),
-                strategy=strategy,
-            )
-            _submit_plan_probe([feat.name], matched[feat.name])
-
-        group_outputs: list[DataFrame] = []
-        chunked_groups = [
-            (kp, group_feats[i : i + UNION_GROUP_MAX_FEATURES])
-            for kp, group_feats in union_groups.items()
-            for i in range(0, len(group_feats), UNION_GROUP_MAX_FEATURES)
-        ]
-        dup_observations: list[tuple[Any, list[tuple[int, str]]]] = []
-        for kp, group_feats in chunked_groups:
-            _emit(
-                "Joining "
-                + ", ".join(f.name for f in group_feats)
-                + " (single-pass)"
-            )
-            specs = [
-                (
-                    feat.name,
-                    feature_tables[feat.name][0],
-                    "feature_time",
-                    feature_tables[feat.name][1],
-                    duration_seconds(feat.embargo) or 0,
-                )
-                for feat in group_feats
-            ]
-            dup_track = [feat.name in window_dup_feats for feat in group_feats]
-            dup_obs = None
-            if any(dup_track):
-                from pyspark.sql import Observation
-
-                dup_obs = Observation()
-                dup_observations.append(
-                    (
-                        dup_obs,
-                        [
-                            (fi, feat.name)
-                            for fi, feat in enumerate(group_feats)
-                            if dup_track[fi]
-                        ],
-                    )
-                )
-            gout = pit_match_multi(
-                spine,
-                specs,
-                key_pairs=list(kp),
-                label_time=lt,
-                lookback_s=duration_seconds(max_lookback_td),
-                staleness_s=duration_seconds(max_staleness_td),
-                strict=(join == "strict"),
-                carry_left=zero_join,
-                dup_track=dup_track if any(dup_track) else None,
-                dup_observation=dup_obs,
-                bucket_s=skew_bucket_s,
-            )
-            group_outputs.append(gout)
-            _submit_plan_probe([feat.name for feat in group_feats], gout)
-
-        # ---- Step 4: recombine on the spine row id ---------------------
-        if zero_join:
-            # carry_left already emitted [*label_cols, features...] — the
-            # whole build has zero joins.
-            combined = group_outputs[0]
-            transcript.append("-- recombine: none (zero-join single-pass plan)")
-        else:
-            combined = spine
-            for gout in group_outputs:
-                combined = combined.join(gout, ROW_ID, "left")
-            for feat in flat_features:
-                if feat.name in matched:
-                    combined = combined.join(matched[feat.name], ROW_ID, "left")
-            transcript.append(
-                f"-- recombine: {len(group_outputs) + len(matched)}-way left "
-                f"join on {ROW_ID} ({len(chunked_groups)} single-pass union "
-                "group(s))"
-            )
-        value_col_names: list[str] = []
-        for feat in flat_features:
-            _, value_cols = feature_tables[feat.name]
-            value_col_names.extend(f"{feat.name}__{c}" for c in value_cols)
-
-        out_cols = [*labels.keys, lt, *labels.target, *value_col_names]
-
-        # ---- Stats + temporal-audit aggregation expressions ------------
-        # Everything the build needs to report — spine row count +
-        # label-time range (combined is 1:1 with the spine, see step 1),
-        # output row count under the on_missing filter, per-feature null
-        # counts, and the post-build temporal verification (reference
-        # engine.py:1342-1384) — is ONE set of aggregates over the
-        # pre-projection combined table. With an output path they ride the
-        # write itself as an Observation (zero extra Spark jobs, and the
-        # manifest describes exactly the materialization that was
-        # written); with output=None they run as a single agg job. The
-        # old plan paid four separate jobs plus a persist of combined
-        # whose only second consumer was those jobs; at 100K-label scale
-        # the fixed ~0.2s-per-job overhead was most of the wall clock.
-        skip_cond = None
-        if on_missing == "skip" and value_col_names:
-            for c in value_col_names:
-                nn = F.col(c).isNotNull()
-                skip_cond = nn if skip_cond is None else (skip_cond & nn)
-
-        first_cols: dict[str, str] = {}
-        for feat in flat_features:
-            _, value_cols = feature_tables[feat.name]
-            if value_cols:
-                first_cols[feat.name] = f"{feat.name}__{value_cols[0]}"
-
-        aggs: list[Any] = [
-            F.count(F.lit(1)).alias("__n_labels"),
-            F.min(lt).alias("__mn"),
-            F.max(lt).alias("__mx"),
-            (
-                F.count(F.when(skip_cond, 1)) if skip_cond is not None else F.count(F.lit(1))
-            ).alias("__n_result"),
-        ]
-        for i, c in enumerate(first_cols.values()):
-            in_result = F.col(c).isNull()
-            if skip_cond is not None:
-                in_result = skip_cond & in_result
-            aggs.append(F.count(F.when(in_result, 1)).alias(f"n_{i}"))
-        for feat in flat_features:
-            ft_col = F.col(f"{feat.name}__feature_time")
-            embargo_s = duration_seconds(feat.embargo) or 0
-            bound = F.col(lt)
-            if embargo_s:
-                bound = bound - F.make_dt_interval(secs=F.lit(embargo_s))
-            viol = (ft_col >= bound) if join == "strict" else (ft_col > bound)
-            aggs.append(
-                F.count(F.when(ft_col.isNotNull() & viol, 1)).alias(
-                    f"v_{safe_name(feat.name)}"
-                )
-            )
-
-        observation = None
-        observed = combined
-        if output is not None:
-            from pyspark.sql import Observation
-
-            observation = Observation()
-            observed = combined.observe(observation, *aggs)
-
-        result = observed
-        if skip_cond is not None:
-            result = result.where(skip_cond)
-        result = result.select(*out_cols)
-
-        # Optional prefix flattening (reference engine.py:1281-1304)
-        if flatten_columns:
-            shorts = [c.split("__", 1)[1] if "__" in c else c for c in result.columns]
-            if len(set(shorts)) == len(shorts):
-                result = result.toDF(*shorts)
-
-        # The deterministic final ORDER BY (O1) range-partitions, and the
-        # range partitioner SAMPLES its child before the real shuffle pass
-        # — without a cache boundary below the sort, the whole join
-        # pipeline would execute twice per write and the Observation node
-        # would double-count every metric. Persisting the pre-sort
-        # projection (smaller than combined: audit/rowid columns already
-        # dropped) makes the sample pass fill the cache, the shuffle pass
-        # read it, and the observe node fire exactly once.
-        pre_sort = None
-        sorted_cache = None
-        if output is not None:
-            pre_sort = result.persist()
-            result = pre_sort
-        result = result.orderBy(*labels.keys, lt)
-        if splits and output is not None:
-            # Split writes are disjoint label_time filters over the SAME
-            # sorted rows the main output writes. Without a cache boundary
-            # above the sort, every split write re-runs the range
-            # partitioner's sample pass AND the full sort from the
-            # pre-sort cache (round 14, VERDICT r13 item 5: the splits
-            # scenario ran 36 stages vs the plain build's 22 — +7 stages
-            # per split). Persisting the SORTED result makes the main
-            # write fill this cache and each split write a cached-scan +
-            # filter + write: the sort is paid exactly once per build.
-            sorted_cache = result.persist()
-            result = sorted_cache
-
-        # ---- Step 5: one materialization -> write + count + stats ------
-        # Join the background duplicate-check action NOW: any standalone
-        # TimefenceDuplicateError must surface before the first output
-        # side effect (and before config errors from the write options,
-        # matching the classic sequential ordering). This join is cheap
-        # since round 13: for the common columns-mode/union-strategy
-        # build the per-source duplicate aggregation no longer exists —
-        # the count rides the main window pass as lag/lead flags (see
-        # pit_match_multi dup_track) and only a NULL-key/NULL-time
-        # subset agg (parquet null-stats prune it to footer reads on
-        # clean data) plus any ineligible sources run here.
-        # (r13 experiment, measured and REJECTED: resolving the FULL
-        # standalone check after the write to overlap its jobs with the
-        # write's stages helped nothing at local[32] — both phases
-        # saturate the same cores and the dup shuffle contends with the
-        # pre-sort persist; alternating same-host A/B: old mins
-        # 12.9-15.9s, overlapped 12.2-16.5s at 1m_x10. The in-window
-        # formulation ELIMINATES the work instead of rescheduling it.)
-        # (r12 experiment, measured and REJECTED: pre-filling the persist
-        # cache with a background noop write to overlap this wait made
-        # 1m_x10 ~20% SLOWER warm and ~75% slower cold — the standalone
-        # fill pays the full pipeline + columnar cache build serially,
-        # while inside the write AQE overlaps those stages with the
-        # sample/sort work. Keep the single-materialization shape.)
-        _resolve_dup_checks()
-        _emit("Writing output")
-        if part_list:
-            part_cols = part_list
-            out_str = str(output) if output is not None else ""
-            if out_str.endswith((".parquet", ".pq")):
-                raise TimefenceConfigError(
-                    "output_partition_by writes a partitioned parquet "
-                    "directory; pass a directory path for 'output', not a "
-                    f"'.parquet' file ({out_str})."
-                )
-            missing = [c for c in part_cols if c not in result.columns]
-            if missing:
-                raise TimefenceConfigError(
-                    f"output_partition_by columns not in output: {missing}. "
-                    f"Available: {result.columns}"
-                )
-        else:
-            part_cols = None
-        _emit("Verifying temporal correctness")
-        stats_map: dict[str, Any] | None = None
-        if output is not None:
-            _write_output(result, output, part_cols)
-            try:
-                stats_map = observation.get
-            except Exception:
-                # The optimizer can eliminate the CollectMetrics node —
-                # statically empty relations, or AQE replacing a subtree
-                # that produced zero rows mid-execution — in which case
-                # the observation row is null and get() raises. Degenerate
-                # builds are exactly the cheap ones, so falling back to
-                # the standalone aggregation costs little.
-                logger.info(
-                    "build stats observation was optimized away; "
-                    "recomputing with a standalone aggregation"
-                )
-        if stats_map is None:
-            stats_map = combined.agg(*aggs).first().asDict()
-
-        # ---- In-window duplicate policy (round 13) ---------------------
-        # The per-feature duplicate-group counts landed with the SAME
-        # action that materialized the build (write, or the stats agg
-        # when output=None); the NULL-subset counts from the batched
-        # pre-pass add the rows the window never saw. A duplicate error
-        # therefore surfaces after the output write — the build still
-        # fails and the just-written files are removed, but a
-        # pre-existing directory an overwrite-build targeted is gone
-        # rather than preserved (the cost of deleting the standalone
-        # scan+shuffle of every source from the critical path).
-        if dup_observations:
-            window_counts: dict[str, int] | None = {}
-            for dup_obs, tracked in dup_observations:
-                vals = _observation_get(dup_obs, timeout_s=60.0)
-                if vals is None:
-                    window_counts = None
-                    break
-                for fi, fname in tracked:
-                    window_counts[fname] = int(vals.get(f"dups_{fi}") or 0)
-            try:
-                if window_counts is None:
-                    # CollectMetrics optimized away (degenerate plans) —
-                    # the classic standalone check applies the policy.
-                    logger.info(
-                        "in-window duplicate metrics unavailable; falling "
-                        "back to the standalone duplicate check"
-                    )
-                    _batch_duplicate_checks(list(window_dup_feats.values()))
-                else:
-                    for fname, (tag, src_df, feat) in window_dup_feats.items():
-                        total = window_counts.get(fname, 0) + null_dup_results.get(
-                            tag, 0
-                        )
-                        _apply_dup_policy(src_df, feat, total)
-            except Exception:
-                if output is not None:
-                    out_str = _abs(output)
-                    if "://" not in out_str:
-                        out_path = Path(out_str)
-                        if out_path.is_dir():
-                            shutil.rmtree(out_path, ignore_errors=True)
-                        elif out_path.exists():
-                            out_path.unlink()
-                raise
-
-        result_cols = result.columns
-        _resolve_plan_probes()
-
-        label_count = int(stats_map["__n_labels"])
-        label_time_range = (
-            [str(stats_map["__mn"]), str(stats_map["__mx"])]
-            if stats_map["__mn"] is not None
-            else None
-        )
-        transcript[spine_transcript_idx] = (
-            f"-- spine: {label_count} label rows, keys={labels.keys}, label_time={lt}"
-        )
-        result_count = int(stats_map["__n_result"])
-
-        feature_stats: dict[str, dict[str, Any]] = {}
-        for i, fname in enumerate(first_cols):
-            null_count = int(stats_map[f"n_{i}"])
-            feature_stats[fname] = {
-                "matched": result_count - null_count,
-                "missing": null_count,
-                "cached": feature_cache_status.get(fname, False),
-            }
-
-        audit_passed = all(
-            int(stats_map[f"v_{safe_name(feat.name)}"] or 0) == 0
-            for feat in flat_features
-        )
-
-        # ---- splits ----------------------------------------------------
-        split_paths = None
-        if splits and output:
-            split_paths = {}
-            output_path = Path(str(output))
-            # label_time survives flatten unchanged: flatten only strips
-            # "{feature}__" prefixes and label_time never carries one.
-            ts_type = result.schema[lt].dataType
-            # The split writes are disjoint filters over the SAME persisted
-            # pre-sort cache, so they run as concurrent Spark actions
-            # (thread pool): two splits cost ~one write's wall clock
-            # instead of two sequential ones.
-            def _write_split(item):
-                split_name, (start, end) = item
-                split_file = (
-                    output_path.parent
-                    / f"{output_path.stem}_{split_name}{output_path.suffix or '.parquet'}"
-                )
-                split_df = result.where(
-                    (F.col(lt) >= F.lit(start).cast(ts_type))
-                    & (F.col(lt) < F.lit(end).cast(ts_type))
-                )
-                _write_output(split_df, split_file)
-                return split_name, split_file
-
-            with ThreadPoolExecutor(max_workers=min(4, len(splits))) as spool:
-                split_paths = dict(spool.map(_write_split, splits.items()))
-
-        elapsed = time.time() - start_time
-        stats = BuildStats(
-            row_count=result_count,
-            column_count=len(result_cols),
-            feature_stats=feature_stats,
-            duration_seconds=elapsed,
-        )
-
-        output_file_size = None
-        if output is not None:
-            p = Path(str(output))
-            if p.is_file():
-                output_file_size = p.stat().st_size
-            elif p.is_dir():
-                output_file_size = sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-
-        build_id = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%SZ")
-        manifest: dict[str, Any] = {
-            "timefence_spark_version": __version__,
-            "build_id": build_id,
-            "created_at": datetime.now(timezone.utc).isoformat(),
-            "duration_seconds": elapsed,
-            "labels": {
-                "path": str(labels.path) if labels.path else None,
-                "content_hash": _content_hash_safe(labels.path, store),
-                "row_count": label_count,
-                "time_range": label_time_range,
-                "keys": labels.keys,
-                "label_time_column": lt,
-                "target_columns": labels.target,
-            },
-            "features": {},
-            "parameters": {
-                "max_lookback": format_duration(max_lookback_td),
-                "max_staleness": format_duration(max_staleness_td),
-                "join": join,
-                "on_missing": on_missing,
-            },
-            "output": {
-                "path": str(output) if output else None,
-                "content_hash": _content_hash_safe(
-                    Path(str(output)) if output else None, store
-                ),
-                "row_count": result_count,
-                "column_count": len(result_cols),
-                "file_size_bytes": output_file_size,
-            },
-            "audit": {
-                "passed": audit_passed,
-                "invariant": (
-                    f"feature_time {'<' if join == 'strict' else '<='} "
-                    "label_time - embargo"
-                ),
-                "rows_checked": result_count,
-            },
-            "environment": {
-                "python_version": _python_version(),
-                "spark_version": spark.version,
-                "os": "spark-local",
-            },
-        }
-        for feat in flat_features:
-            fstats = feature_stats.get(feat.name, {})
-            manifest["features"][feat.name] = {
-                "definition_hash": _definition_hash(feat),
-                "source_content_hash": _content_hash_safe(feat.source.path, store),
-                "embargo": format_duration(feat.embargo),
-                "matched_rows": fstats.get("matched", 0),
-                "missing_rows": fstats.get("missing", 0),
-                "output_columns": feature_tables[feat.name][1],
-                "strategy": strategy,
-                "cached": feature_cache_status.get(feat.name, False),
-            }
-
-        if store is not None and feature_cache_keys:
-            bck = store.build_cache_key(
-                _content_hash_safe(labels.path, store),
-                feature_cache_keys,
-                format_duration(max_lookback_td),
-                format_duration(max_staleness_td),
-                join,
-                on_missing,
-                output_spec,
-            )
-            manifest["build_cache_key"] = bck
-            manifest_path = store.save_build(manifest)
-            manifest["manifest_path"] = str(manifest_path)
-
-        if sorted_cache is not None:
-            sorted_cache.unpersist()
-        if pre_sort is not None:
-            pre_sort.unpersist()
-        return BuildResult(
-            output_path=str(output) if output else None,
-            manifest=manifest,
-            stats=stats,
-            splits=split_paths,
-            sql="\n\n".join(transcript),
-            physical_plans=physical_plans,
-            dataframe=result,
-        )
+        b.transcript.append(m.transcript)
+        result, stats_map, split_paths = _write_and_verify(b, m, tables, window_dups)
+        return _build_result(b, result, stats_map, split_paths, tables, m.plans)
     finally:
         if saved_shuffle_conf is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", saved_shuffle_conf
-            )
-        # Error paths can leave the background pools (duplicate check,
-        # plan probes) un-joined; shut them down without waiting so a
-        # failed build doesn't block interpreter exit on a collect.
-        for _pool in ("dup_pool", "plan_probe_pool"):
-            p = locals().get(_pool)
-            if p is not None:
-                p.shutdown(wait=False)
-        # The spine's localCheckpoint blocks are freed by the
-        # ContextCleaner once the DataFrame is garbage-collected;
-        # unpersist() does not apply to checkpointed data.
+            b.spark.conf.set("spark.sql.shuffle.partitions", saved_shuffle_conf)
+        # localCheckpoint blocks are freed by the ContextCleaner once the
+        # spine is garbage-collected; unpersist() does not apply to them.
         del spine
 
 
@@ -1603,6 +1576,37 @@ def _audit_temporal_api(
 audit.temporal = _audit_temporal_api  # type: ignore[attr-defined]
 
 
+def _leak_detail(
+    name: str,
+    leaky_count: int,
+    total: int,
+    max_us: int | None,
+    med_us: float | None,
+    leaky_rows: DataFrame,
+) -> FeatureAuditDetail:
+    """A LEAK verdict: magnitudes, severity and up to 1000 of the
+    violating rows (the capture is best-effort)."""
+    max_leak = timedelta(microseconds=int(max_us)) if max_us is not None else None
+    med_leak = timedelta(microseconds=int(med_us)) if med_us is not None else None
+    pct = leaky_count / total if total > 0 else 0.0
+    rows = None
+    try:
+        rows = leaky_rows.limit(1000).toPandas()
+    except Exception as exc:
+        logger.debug("Could not capture leaky rows for %s: %s", name, exc)
+    return FeatureAuditDetail(
+        name=name,
+        leaky_row_count=leaky_count,
+        leaky_row_pct=pct,
+        max_leakage=max_leak,
+        median_leakage=med_leak,
+        severity=classify_severity(pct, max_leak),
+        total_rows=total,
+        clean=False,
+        leaky_rows=rows,
+    )
+
+
 def _audit_temporal(
     data: str | Path | Any,
     feature_time_columns: dict[str, str],
@@ -1638,28 +1642,13 @@ def _audit_temporal(
         for i, (feat_col, ft_name) in enumerate(items):
             leaky_count = int(row[f"leak_{i}"])
             if leaky_count > 0:
-                max_us = row[f"max_{i}"]
-                med_us = row[f"med_{i}"]
-                max_leak = timedelta(microseconds=int(max_us)) if max_us is not None else None
-                med_leak = timedelta(microseconds=int(med_us)) if med_us is not None else None
-                pct = leaky_count / total if total > 0 else 0.0
-                leaky_rows_df = None
-                try:
-                    leaky_rows_df = (
-                        df.where(F.col(ft_name) >= lt_col).limit(1000).toPandas()
-                    )
-                except Exception as exc:  # capture is best-effort
-                    logger.debug("Could not capture leaky rows for %s: %s", feat_col, exc)
-                report.features[feat_col] = FeatureAuditDetail(
-                    name=feat_col,
-                    leaky_row_count=leaky_count,
-                    leaky_row_pct=pct,
-                    max_leakage=max_leak,
-                    median_leakage=med_leak,
-                    severity=classify_severity(pct, max_leak),
-                    total_rows=total,
-                    clean=False,
-                    leaky_rows=leaky_rows_df,
+                report.features[feat_col] = _leak_detail(
+                    feat_col,
+                    leaky_count,
+                    total,
+                    row[f"max_{i}"],
+                    row[f"med_{i}"],
+                    df.where(F.col(ft_name) >= lt_col),
                 )
             else:
                 report.features[feat_col] = FeatureAuditDetail(
@@ -1686,7 +1675,14 @@ def _audit_rebuild(
     checkpoint_dir: str | Path | None = None,
 ) -> AuditReport:
     """Rebuild-and-compare: recompute every feature with the correct PIT join
-    and diff values against the existing dataset (reference engine.py:1635-1872)."""
+    and diff values against the existing dataset (reference engine.py:1635-1872).
+
+    The rebuild is the build's match phase (:func:`_match`), rebuilt
+    columns prefixed ``__c_``: under one key mapping the existing rows
+    ride through the union window (zero-join — no row id, no pin, no
+    compare join); otherwise the rows are pinned with a row id and every
+    group joins back on it. Every feature's stats compute in ONE
+    aggregation over the comparison table."""
     spark = get_spark(spark)
     keys_list = [keys] if isinstance(keys, str) else list(keys)
     flat_features = flatten_features(features)
@@ -1696,93 +1692,49 @@ def _audit_rebuild(
     max_staleness_td = parse_duration(max_staleness)
 
     existing = _load_dataset_df(spark, data)
-    # Same rowid pin as the build spine: checkpoint, don't just cache —
-    # the rebuild-compare join is keyed on these ids.
-    existing = pin(
-        existing.withColumn(ROW_ID, F.monotonically_increasing_id()),
-        checkpoint_dir=_opt_str(checkpoint_dir),
-        eager=True,
-    )
-    total = existing.count()
-    existing_cols = [c for c in existing.columns if c != ROW_ID]
-
-    try:
-        report = AuditReport(total_rows=total, mode="rebuild")
-        lt_dtype = existing.schema[label_time].dataType
-
-        # Rebuild every comparable feature in as few passes as possible:
-        # features sharing an entity-key mapping rebuild through ONE
-        # pit_match_multi union/window pass (same plan the build uses), all
-        # rebuilt columns attach through one comparison join, and every
-        # feature's stats compute in ONE aggregation action. The audited
-        # feature count no longer multiplies the number of Spark jobs
-        # (previously: one rebuild + one join + one agg per feature).
-        registered: dict[str, DataFrame] = {}
-        audited: list[tuple[Feature, list[str], list[tuple[str, str]]]] = []
-        groups: dict[tuple, list[tuple[Feature, DataFrame, list[str]]]] = {}
-        registered.update(_preload_sources(spark, flat_features))
-        for feat in flat_features:
-            src_name = feat.source.name
-            if src_name not in registered:
-                registered[src_name] = load_source_df(spark, feat.source)
-            fdf, value_cols = _compute_feature_df(spark, feat, registered[src_name])
-            matching_cols = []
-            for col in value_cols:
-                namespaced = f"{feat.name}__{col}"
-                if namespaced in existing_cols:
-                    matching_cols.append((namespaced, f"__c_{namespaced}"))
-                elif col in existing_cols:
-                    matching_cols.append((col, f"__c_{namespaced}"))
-            if not matching_cols:
-                # Nothing to compare against — no need to rebuild it at all.
-                report.features[feat.name] = FeatureAuditDetail(
-                    name=feat.name, total_rows=total, clean=True
-                )
-                continue
-            key_pairs = [(lk, feat.key_mapping.get(lk, lk)) for lk in keys_list]
+    existing_cols = existing.columns
+    lt_dtype = existing.schema[label_time].dataType
+    registered = _preload_sources(spark, flat_features)
+    audited: list[tuple[Feature, list[str], list[tuple[str, str]]]] = []
+    tables: list[tuple[Feature, DataFrame, list[str]]] = []
+    for feat in flat_features:
+        fdf, value_cols = _compute_feature_df(spark, feat, registered[feat.source.name])
+        matching_cols = []
+        for col in value_cols:
+            namespaced = f"{feat.name}__{col}"
+            if namespaced in existing_cols:
+                matching_cols.append((namespaced, f"__c_{namespaced}"))
+            elif col in existing_cols:
+                matching_cols.append((col, f"__c_{namespaced}"))
+        if matching_cols:  # nothing to compare against -> not rebuilt
             audited.append((feat, value_cols, matching_cols))
-            groups.setdefault(tuple(key_pairs), []).append((feat, fdf, value_cols))
+            tables.append((feat, fdf, value_cols))
 
-        if not audited:
-            return report
-
+    zero_join = _zero_join([t[0] for t in tables], keys_list, "union")
+    spine = existing
+    if tables and not zero_join:
+        spine = pin(
+            existing.withColumn(ROW_ID, F.monotonically_increasing_id()),
+            checkpoint_dir=_opt_str(checkpoint_dir),
+            eager=True,
+        )
+    try:
         cmp = existing
-        for kp, group in groups.items():
-            specs = [
-                (
-                    feat.name,
-                    fdf,
-                    "feature_time",
-                    value_cols,
-                    duration_seconds(feat.embargo) or 0,
-                )
-                for feat, fdf, value_cols in group
-            ]
-            correct = pit_match_multi(
-                existing,
-                specs,
-                key_pairs=list(kp),
-                label_time=label_time,
+        if tables:
+            cmp = _match(
+                spine,
+                tables,
+                keys_list,
+                label_time,
                 lookback_s=duration_seconds(max_lookback_td),
                 staleness_s=duration_seconds(max_staleness_td),
                 strict=(join == "strict"),
-            )
-            # The audited dataset usually carries the same namespaced column
-            # names the rebuild produces — prefix the rebuilt side to keep
-            # the comparison join unambiguous.
-            correct = correct.select(
-                ROW_ID,
-                *[
-                    F.col(c).alias(f"__c_{c}")
-                    for c in correct.columns
-                    if c != ROW_ID
-                ],
-            )
-            cmp = cmp.join(correct, ROW_ID, "inner")
-
+                zero_join=zero_join,
+                prefix="__c_",
+            ).combined
         cmp = cmp.persist()
         try:
-            aggs: list[F.Column] = []
+            aggs: list[F.Column] = [F.count(F.lit(1)).alias("__total")]
             mismatch_by_feat: dict[str, dict[str, F.Column]] = {}
             diff_by_feat: dict[int, F.Column] = {}
             for fi, (feat, value_cols, matching_cols) in enumerate(audited):
@@ -1817,7 +1769,14 @@ def _audit_rebuild(
                     aggs.append(F.count(F.when(mismatch, 1)).alias(f"bad_{fi}_{j}"))
                 mismatch_by_feat[feat.name] = mismatch_exprs
             row = cmp.agg(*aggs).first()
-
+            total = int(row["__total"])  # cmp is 1:1 with the dataset
+            report = AuditReport(total_rows=total, mode="rebuild")
+            rebuilt = {feat.name for feat, _, _ in audited}
+            for feat in flat_features:
+                if feat.name not in rebuilt:
+                    report.features[feat.name] = FeatureAuditDetail(
+                        name=feat.name, total_rows=total, clean=True
+                    )
             for fi, (feat, value_cols, matching_cols) in enumerate(audited):
                 leaky_count = 0
                 worst: str | None = None
@@ -1828,46 +1787,22 @@ def _audit_rebuild(
                         worst = exist_col
 
                 if leaky_count > 0:
-                    pct = leaky_count / total if total > 0 else 0.0
-                    max_leak = (
-                        timedelta(microseconds=int(row[f"max_{fi}"]))
-                        if row[f"max_{fi}"] is not None
-                        else None
-                    )
                     # Exact median (DuckDB MEDIAN parity) requires a full
                     # sort of the lag column; defer it to the leaky path so
                     # a clean audit — the common case — never pays N
                     # column-sorts in the stats aggregation.
-                    med_row = cmp.agg(
+                    med_us = cmp.agg(
                         F.percentile(diff_by_feat[fi], F.lit(0.5)).alias("m")
-                    ).first()
-                    med_leak = (
-                        timedelta(microseconds=int(med_row["m"]))
-                        if med_row is not None and med_row["m"] is not None
-                        else None
-                    )
-                    leaky_rows_df = None
-                    try:
-                        leaky_rows_df = (
-                            cmp.where(mismatch_by_feat[feat.name][worst])
-                            .select(*existing_cols)
-                            .limit(1000)
-                            .toPandas()
-                        )
-                    except Exception as exc:
-                        logger.debug(
-                            "Could not capture leaky rows for %s: %s", feat.name, exc
-                        )
-                    report.features[feat.name] = FeatureAuditDetail(
-                        name=feat.name,
-                        leaky_row_count=leaky_count,
-                        leaky_row_pct=pct,
-                        max_leakage=max_leak,
-                        median_leakage=med_leak,
-                        severity=classify_severity(pct, max_leak),
-                        total_rows=total,
-                        clean=False,
-                        leaky_rows=leaky_rows_df,
+                    ).first()["m"]
+                    report.features[feat.name] = _leak_detail(
+                        feat.name,
+                        leaky_count,
+                        total,
+                        row[f"max_{fi}"],
+                        med_us,
+                        cmp.where(mismatch_by_feat[feat.name][worst]).select(
+                            *existing_cols
+                        ),
                     )
                 else:
                     report.features[feat.name] = FeatureAuditDetail(
@@ -1881,7 +1816,7 @@ def _audit_rebuild(
         return report
     finally:
         # localCheckpoint blocks are freed on GC, not by unpersist().
-        del existing
+        del spine
 
 
 # ---------------------------------------------------------------------------

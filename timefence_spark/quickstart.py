@@ -156,7 +156,7 @@ def generate_leaky_training_set(dir_path: Path) -> None:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from timefence_spark.engine import _write_single_parquet, get_spark
+    from timefence_spark.engine import _write_output, get_spark
 
     spark = get_spark()
     users = spark.read.parquet(str(dir_path / "users.parquet"))
@@ -216,7 +216,7 @@ def generate_leaky_training_set(dir_path: Path) -> None:
         )
         .orderBy("user_id", "label_time")
     )
-    _write_single_parquet(out, dir_path / "train_LEAKY.parquet")
+    _write_output(out, dir_path / "train_LEAKY.parquet")
 
 
 def create_quickstart(target: Path) -> Path:

@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from datetime import timedelta
+from functools import cached_property
 from pathlib import Path
 from typing import Any
 
@@ -38,16 +39,33 @@ class BuildResult:
     stats: BuildStats
     splits: dict[str, Path] | None = None
     sql: str = ""  # plan transcript: generated logical-plan descriptions
-    # Catalyst physical-plan summary per feature join (exchanges, join kinds,
-    # windows, scans) — the Spark analogue of the reference's executed-SQL
-    # transcript (reference engine.py:1491-1497).
-    physical_plans: dict[str, str] = field(default_factory=dict)
     # The built training set as a LAZY Spark DataFrame (Spark-native extra;
     # the reference's BuildResult is file-only, engine.py:76-81). Always set
     # for fresh builds — with output=None this is the only way to consume
     # the result; with an output path it shares the written plan. None for
     # store-cache hits (read output_path instead).
     dataframe: Any = None
+    # Feature name -> the matched DataFrame holding its as-of join; the
+    # source of physical_plans.
+    matched: dict[str, Any] = field(default_factory=dict, repr=False)
+
+    @cached_property
+    def physical_plans(self) -> dict[str, str]:
+        """Catalyst physical-plan summary per feature join (exchanges, join
+        kinds, windows, scans) — the Spark analogue of the reference's
+        executed-SQL transcript (reference engine.py:1491-1497). Planned on
+        first access, once per matched DataFrame; a build plans nothing
+        for it."""
+        from timefence_spark.plans import physical_summary
+
+        summaries: dict[int, str] = {}
+        for df in self.matched.values():
+            if id(df) not in summaries:
+                try:
+                    summaries[id(df)] = str(physical_summary(df))
+                except Exception:  # a plan summary never fails the caller
+                    summaries[id(df)] = ""
+        return {name: summaries[id(df)] for name, df in self.matched.items()}
 
     def __str__(self) -> str:
         lines = [
