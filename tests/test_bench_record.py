@@ -14,23 +14,29 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 
 
-def _detail() -> dict:
-    """The COMMITTED record (git HEAD) when available — a bench run in
-    the working tree overwrites BENCH_DETAIL.json with scratch output
+def _committed(name: str) -> str:
+    """``name`` as committed at git HEAD; the working-tree copy only when
+    git is unavailable or HEAD has no such file. A bench run in the
+    working tree overwrites BENCH_DETAIL.json with scratch output
     (possibly at a different core count), and these gates are about the
     committed comparison base, not whatever a measurement loop last
-    wrote (round 14: the round-13 driver's own 8-core bench output got
-    committed over the 32-core record and failed the BASELINE gate)."""
+    wrote. The record and the table it feeds are read from the same
+    source, so a record committed without its table fails at once."""
     try:
         out = subprocess.run(
-            ["git", "show", "HEAD:BENCH_DETAIL.json"],
-            cwd=ROOT, capture_output=True, timeout=30,
+            ["git", "show", f"HEAD:{name}"],
+            cwd=ROOT, capture_output=True, text=True, timeout=30,
         )
-        if out.returncode == 0 and out.stdout.strip():
-            return json.loads(out.stdout)
-    except (OSError, subprocess.TimeoutExpired, json.JSONDecodeError):
-        pass
-    return json.loads((ROOT / "BENCH_DETAIL.json").read_text())
+    except (OSError, subprocess.TimeoutExpired):
+        out = None
+    if out is not None and out.returncode == 0:
+        return out.stdout
+    return (ROOT / name).read_text()
+
+
+def _detail() -> dict:
+    """The committed record; a corrupt one fails the gate."""
+    return json.loads(_committed("BENCH_DETAIL.json"))
 
 
 def test_baseline_engine_table_quotes_committed_bench_detail():
@@ -39,7 +45,7 @@ def test_baseline_engine_table_quotes_committed_bench_detail():
     to 2 places, the table's precision)."""
     detail = _detail()
     scale = detail.get("scale") or {}
-    md = (ROOT / "BASELINE.md").read_text()
+    md = _committed("BASELINE.md")
     # A cell may carry a parenthesized steal annotation after the
     # committed number (ADVICE r13), e.g. "16.35 s (steal; quiet 9.97 s)"
     # — the leading number must still quote the record verbatim.

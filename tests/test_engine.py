@@ -287,13 +287,37 @@ def test_splits(spark, tmp_path, users_feat_labels):
     test = spark.read.parquet(str(res.splits["test"]))
     assert train.count() + test.count() <= 50
     assert train.agg(F.max("label_time")).first()[0] < dt.datetime(2024, 4, 1)
+    # Each split file is sorted like the single-file output.
+    for path in res.splits.values():
+        rows = [(r["user_id"], r["label_time"]) for r in spark.read.parquet(str(path)).collect()]
+        assert rows == sorted(rows)
+
+    # Labels run 2024-01-20 .. 2024-09-21: splits that cover neither end
+    # warn about both, from the range the build's own action observed.
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        res = tf.build(
+            _labels(labels_path),
+            [_country_feature(users_path)],
+            str(tmp_path / "narrow.parquet"),
+            splits={"mid": ("2024-03-01", "2024-06-01")},
+            spark=spark,
+        )
+    coverage = {str(w.message): w.filename for w in caught if "Splits" in str(w.message)}
+    assert coverage == {
+        "Splits start at 2024-03-01 but labels start at 2024-01-20 00:00:00.": __file__,
+        "Splits end at 2024-06-01 but labels extend to 2024-09-21 00:00:00.": __file__,
+    }
+    assert spark.read.parquet(str(res.splits["mid"])).count() > 0
 
 
 def test_split_overlap_error(spark, users_feat_labels):
-    users_path, _, labels_path = users_feat_labels
+    """Split ranges are checked before any Spark work: the overlap error
+    comes first even when the labels path does not exist."""
+    users_path, _, _ = users_feat_labels
     with pytest.raises(TimefenceConfigError, match="overlap"):
         tf.build(
-            _labels(labels_path),
+            _labels("/nonexistent/labels.parquet"),
             [_country_feature(users_path)],
             "/tmp/never.parquet",
             splits={
@@ -347,11 +371,20 @@ def test_duplicate_detection_error_and_keep_any(spark, tmp_path):
             tf.build(labels, [feat_err], str(prev), spark=spark, skew_bucket=skew_bucket)
         assert prev.read_bytes() == b"an earlier build's output"
         assert not list(tmp_path.glob(".*staging*"))
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            res = tf.build(labels, [feat_ok], spark=spark, skew_bucket=skew_bucket)
-        # keep_any resolves the tie deterministically: max payload wins.
-        assert [r["f__v"] for r in res.dataframe.collect()] == [2.0]
+        # keep_any resolves the tie deterministically: max payload wins;
+        # its warning points at this file whether the in-window policy
+        # (union) or the standalone check (join) raised it.
+        for strategy in ("union", "join"):
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                res = tf.build(
+                    labels, [feat_ok], spark=spark, skew_bucket=skew_bucket,
+                    strategy=strategy,
+                )
+            assert [r["f__v"] for r in res.dataframe.collect()] == [2.0]
+            dup_warnings = [w for w in caught if "keep_any" in str(w.message)]
+            assert dup_warnings, [str(w.message) for w in caught]
+            assert {w.filename for w in dup_warnings} == {__file__}
 
 
 def test_duplicate_detection_null_key_rows(spark, tmp_path):
@@ -1015,63 +1048,71 @@ def test_preload_sources_csv_stays_ntz_and_conf_restored(spark, tmp_path):
         assert df.schema["updated_at"].dataType.typeName() == "timestamp_ntz"
 
 
+def _conf_probe(spark):
+    """A progress callback that records spark.sql.shuffle.partitions at
+    every build event."""
+    seen = []
+    return seen, lambda msg: seen.append(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+
 def test_build_tunes_shuffle_partitions_for_small_inputs(
     spark, tmp_path, users_feat_labels
 ):
-    """VERDICT r9 item 7: a build whose file inputs total a few MB runs
-    its shuffles at a width scaled to input bytes (floor 4) instead of
-    the session's 32 — ~32 near-empty tasks per stage were most of the
-    100k_x1 fixed floor. The session conf is restored afterwards, the
-    transcript records the tuning, and DataFrame-backed inputs (unsized
-    without a job) leave the conf untouched."""
-    users_path, txns_path, labels_path = users_feat_labels
+    """A build leaves the session's shuffle width alone: the width every
+    query on the session sees stays the configured one at every build
+    event, for file-backed and DataFrame-backed inputs alike (AQE sizes
+    the build's shuffles instead), and the transcript records no
+    width override."""
+    users_path, _, labels_path = users_feat_labels
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    res = tf.build(
-        _labels(labels_path), [_country_feature(users_path)], None,
-        spark=spark,
-    )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    tuned_lines = [l for l in res.sql.splitlines() if "tuned" in l]
-    assert tuned_lines and f"{before} -> 4" in tuned_lines[0]
-    assert res.stats.row_count == 50
-
-    # DataFrame-backed labels: no sizing possible -> no tuning line
     ldf = spark.read.parquet(labels_path)
-    res2 = tf.build(
-        tf.Labels(df=ldf, keys="user_id", label_time="label_time",
-                  target="churned"),
-        [_country_feature(users_path)], None, spark=spark,
-    )
-    assert not [l for l in res2.sql.splitlines() if "tuned" in l]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    for labels in (
+        _labels(labels_path),
+        tf.Labels(df=ldf, keys="user_id", label_time="label_time", target="churned"),
+    ):
+        for output in (None, str(tmp_path / "conf.parquet")):
+            seen, probe = _conf_probe(spark)
+            res = tf.build(
+                labels, [_country_feature(users_path)], output,
+                progress=probe, spark=spark,
+            )
+            assert seen and set(seen) == {before}
+            assert spark.conf.get("spark.sql.shuffle.partitions") == before
+            assert not [l for l in res.sql.splitlines() if "tuned" in l]
+            assert res.stats.row_count == 50
 
 
 def test_build_raises_shuffle_partitions_for_big_inputs(
-    spark, monkeypatch, users_feat_labels
+    spark, monkeypatch, tmp_path, users_feat_labels
 ):
-    """Round 14 (VERDICT r13 item 8): the same input-bytes sizing also
-    RAISES the shuffle width when the session's configured partitions
-    would leave each union/window sort task fatter than the per-task
-    target — the 10M x 10 build at 32 partitions spilled 34 GB in its
-    window stage; at an input-derived width it spills zero. Simulated
-    here by shrinking the per-partition byte targets so the small test
-    inputs count as 'big'; the conf is restored after the build and the
-    cap bounds the width."""
-    import timefence_spark.engine as eng
+    """No environment variable widens a build's shuffles:
+    TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION (once an opt-in raise of
+    the session width) changes neither the session conf nor the output.
+    A directory output is sorted per part file and AQE coalesces the
+    final shuffle, so a small build writes fewer part files than the
+    session width."""
+    import pyarrow.parquet as pq
 
     users_path, txns_path, labels_path = users_feat_labels
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    # Make every input byte expensive: shrink target drops below any
-    # real file, raise target of 1 KB makes these MB-scale inputs ask
-    # for hundreds of partitions; the cap must bound it.
-    monkeypatch.setattr(eng, "_TUNE_BYTES_PER_PARTITION", 1)
-    monkeypatch.setattr(eng, "_TUNE_RAISE_BYTES_PER_PARTITION", 1)
-    monkeypatch.setattr(eng, "_TUNE_MAX_PARTITIONS", 64)
-    res = tf.build(
-        _labels(labels_path), [_country_feature(users_path)], None,
-        spark=spark,
-    )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    tuned_lines = [l for l in res.sql.splitlines() if "tuned" in l]
-    assert tuned_lines and f"{before} -> 64" in tuned_lines[0]
-    assert res.stats.row_count == 50
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    feats = [_country_feature(users_path), _spend_feature(txns_path)]
+    outputs = {}
+    for env in (None, "1"):
+        if env is not None:
+            monkeypatch.setenv("TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION", env)
+        out = tmp_path / f"dir_out_{env}"
+        seen, probe = _conf_probe(spark)
+        res = tf.build(_labels(labels_path), feats, str(out), progress=probe, spark=spark)
+        assert set(seen) == {str(width)}
+        assert res.stats.row_count == 50
+        parts = sorted(out.glob("part-*.parquet"))
+        assert 1 <= len(parts) < width
+        for part in parts:
+            rows = pq.read_table(part).select(["user_id", "label_time"]).to_pylist()
+            assert rows == sorted(rows, key=lambda r: (r["user_id"], r["label_time"]))
+        outputs[env] = sorted(
+            tuple(r) for r in spark.read.parquet(str(out)).collect()
+        )
+    assert outputs[None] == outputs["1"]

@@ -10,17 +10,19 @@ are the ones Spark cannot infer:
 * as-of strategy (the no-fanout union/last_value plan by default; an opt-in
   range join that broadcasts small feature tables) — see operators/asof.py;
 * a single localCheckpoint() of the label spine (pins the nondeterministic
-  row id against recomputation — eviction-proof, unlike a cache) and a
-  persist() of the final result (one materialization serving write + count
-  + stats, the reference's deliberate perf fix, CHANGELOG.md:46).
+  row id against recomputation — eviction-proof, unlike a cache);
+* the output order, made by the writer without a range sort: a single-file
+  output is one sorted partition, a directory output sorts each part file.
+  Nothing is cached, so the match runs once per build and AQE sizes every
+  shuffle; the session's shuffle width is never changed.
 """
 
 from __future__ import annotations
 
 import glob
 import logging
-import os
 import shutil
+import sys
 import time
 import uuid
 import warnings
@@ -279,8 +281,6 @@ def _definition_hash(feat: Feature) -> str:
 
 
 def _python_version() -> str:
-    import sys
-
     v = sys.version_info
     return f"{v.major}.{v.minor}.{v.micro}"
 
@@ -362,6 +362,18 @@ def _dup_check_agg(src_df: DataFrame, feature: Feature) -> DataFrame:
     )
 
 
+def _warn(message: str) -> None:
+    """``warnings.warn`` attributed to the first caller outside this
+    package: build warnings are raised at different call depths, so a
+    fixed ``stacklevel`` would point into the engine (Python 3.11 has no
+    ``skip_file_prefixes``)."""
+    package = Path(__file__).parent
+    frame, level = sys._getframe(1), 2
+    while frame is not None and Path(frame.f_code.co_filename).is_relative_to(package):
+        frame, level = frame.f_back, level + 1
+    warnings.warn(message, stacklevel=level)
+
+
 def _apply_dup_policy(src_df: DataFrame, feat: Feature, dup_pairs: int) -> None:
     """Raise / warn per on_duplicate (reference engine.py:586-627); the
     top-3 example query runs only on the error path."""
@@ -378,11 +390,10 @@ def _apply_dup_policy(src_df: DataFrame, feat: Feature, dup_pairs: int) -> None:
             .collect()
         ]
         raise duplicate_error(feat.name, dup_pairs, examples)
-    warnings.warn(
+    _warn(
         f"Feature '{feat.name}' has {dup_pairs} duplicate "
         f"(key, feature_time) pairs. Using on_duplicate='keep_any' — "
-        "one row will be selected deterministically (max payload).",
-        stacklevel=3,
+        "one row will be selected deterministically (max payload)."
     )
 
 
@@ -465,44 +476,40 @@ def _batch_duplicate_checks(
     return [dup_pairs.get(f"n{i}", 0) for i in range(len(null_subset_checks))]
 
 
-def _validate_splits(
-    splits: dict[str, tuple[str, str]], labels_df: DataFrame, label_time_col: str
-) -> None:
-    """Overlap = error; gaps and non-coverage = warnings
-    (reference engine.py:630-675)."""
+def _validate_splits(splits: dict[str, tuple[str, str]]) -> None:
+    """Overlap = error, gap = warning (reference engine.py:630-675);
+    coverage of the labels is checked after the build's action (see
+    :func:`_warn_split_coverage`)."""
     sorted_splits = sorted(splits.items(), key=lambda x: x[1][0])
-    for i in range(len(sorted_splits) - 1):
-        name_a, (_, end_a) = sorted_splits[i]
-        name_b, (start_b, _) = sorted_splits[i + 1]
+    for (name_a, (_, end_a)), (name_b, (start_b, _)) in zip(
+        sorted_splits, sorted_splits[1:]
+    ):
         if end_a > start_b:
             raise TimefenceConfigError(
                 f"Split ranges overlap: '{name_a}' ends at {end_a} "
                 f"but '{name_b}' starts at {start_b}."
             )
         if end_a < start_b:
-            warnings.warn(
+            _warn(
                 f"Gap between splits '{name_a}' (ends {end_a}) and '{name_b}' "
-                f"(starts {start_b}). Labels in this range will not appear in any split.",
-                stacklevel=3,
+                f"(starts {start_b}). Labels in this range will not appear in any split."
             )
-    row = labels_df.agg(
-        F.min(label_time_col).alias("mn"), F.max(label_time_col).alias("mx")
-    ).first()
-    if row and row["mn"] is not None and sorted_splits:
-        first_start = sorted_splits[0][1][0]
-        last_end = sorted_splits[-1][1][1]
-        min_label = str(row["mn"])[:19]
-        max_label = str(row["mx"])[:19]
-        if first_start > min_label:
-            warnings.warn(
-                f"Splits start at {first_start} but labels start at {min_label}.",
-                stacklevel=3,
-            )
-        if last_end < max_label:
-            warnings.warn(
-                f"Splits end at {last_end} but labels extend to {max_label}.",
-                stacklevel=3,
-            )
+
+
+def _warn_split_coverage(
+    splits: dict[str, tuple[str, str]], min_label: Any, max_label: Any
+) -> None:
+    """Warn when the splits do not reach the labels' first or last
+    label_time (the range the build's stats aggregation observed)."""
+    if min_label is None:
+        return
+    first_start = min(start for start, _ in splits.values())
+    last_end = max(splits.values())[1]
+    min_label, max_label = str(min_label)[:19], str(max_label)[:19]
+    if first_start > min_label:
+        _warn(f"Splits start at {first_start} but labels start at {min_label}.")
+    if last_end < max_label:
+        _warn(f"Splits end at {last_end} but labels extend to {max_label}.")
 
 
 def _validate_feature_names(flat_features: list[Feature]) -> None:
@@ -569,86 +576,6 @@ def _compute_feature_df(
         c for c in fdf.columns if c != "feature_time" and c not in feat.source_keys
     ]
     return fdf, value_cols
-
-
-# ---------------------------------------------------------------------------
-# Public API: build
-# ---------------------------------------------------------------------------
-
-
-_TUNE_BYTES_PER_PARTITION = 4 * 1024 * 1024
-_TUNE_MIN_PARTITIONS = 4
-# Scale-adaptive RAISE direction (round 14, VERDICT r13 item 8, guide
-# §2.2/§5): one shuffle partition per this many bytes of on-disk input
-# when the session width would leave sort partitions fatter than
-# execution memory. Packed numeric parquet expands ~4-6x when
-# deserialized into union/window sort rows, so the 3.1 GB 10M x 10
-# input through 32 partitions put ~850 MB per sort task against ~300 MB
-# of execution memory — the window stage spilled 34 GB per build
-# (measured; 64 partitions still spill ~34 GB, 256 spill ZERO).
-#
-# DEFAULT OFF (0 = disabled): on the bench host the spill lands in page
-# cache and costs almost nothing, while the 8x reduce-task count costs
-# a measured 10-20% of wall — a raise default would regress the local
-# bench to buy nothing locally. On clusters whose shuffle/spill media
-# are real disks, set TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION to
-# (input bytes x ~5 deserialization expansion / per-task execution
-# memory); ~12-16 MB reproduces the zero-spill 256-partition shape for
-# the 10M x 10 build. The cap bounds scheduler overhead either way.
-_TUNE_RAISE_BYTES_PER_PARTITION = int(
-    os.environ.get("TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION", 0)
-)
-_TUNE_MAX_PARTITIONS = 2048
-
-
-def _tuned_shuffle_partitions(
-    spark: SparkSession, labels: Labels, flat_features: Sequence[Feature]
-) -> int | None:
-    """Shuffle width scaled to the build's on-disk input bytes, or None
-    when any input is DataFrame-backed (sizing it would cost a job) or
-    sizing fails. A driver-side Hadoop listing only — no Spark job.
-
-    Two directions, both derived from input size rather than a constant
-    tuned to any one host (the 100 TB rule: partitioning must follow the
-    data): tiny builds SHRINK to one partition per ~4 MB (floor 4) so a
-    100k-label build stops paying ~32 near-empty sort tasks per stage;
-    big builds RAISE (cap 2048) so the union/window sort partitions fit
-    execution memory instead of spilling — opt-in via
-    TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION because on the local
-    bench host spill is page-cache-absorbed while the extra reduce
-    tasks cost real wall (see _TUNE_RAISE_BYTES_PER_PARTITION). AQE's
-    partition coalescing still merges post-shuffle partitions that come
-    out small, so an overshooting raise estimate is self-correcting."""
-    paths = [labels.path] + [f.source.path for f in flat_features]
-    if any(p is None for p in paths):
-        return None
-    try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        total = 0
-        for p in paths:
-            jp = jvm.org.apache.hadoop.fs.Path(str(p))
-            total += jp.getFileSystem(hconf).getContentSummary(jp).getLength()
-    except Exception:
-        return None
-    shrink = max(
-        _TUNE_MIN_PARTITIONS,
-        int(total // _TUNE_BYTES_PER_PARTITION) + 1,
-    )
-    current_s = spark.conf.get("spark.sql.shuffle.partitions")
-    if not current_s.isdigit():
-        return shrink  # caller applies it only when it differs
-    current = int(current_s)
-    if shrink < current:
-        return shrink
-    if _TUNE_RAISE_BYTES_PER_PARTITION > 0:
-        raise_to = min(
-            _TUNE_MAX_PARTITIONS,
-            int(total // _TUNE_RAISE_BYTES_PER_PARTITION) + 1,
-        )
-        if raise_to > current:
-            return raise_to
-    return None
 
 
 # ---------------------------------------------------------------------------
@@ -752,6 +679,8 @@ def _validate_build_args(
         raise TimefenceConfigError(
             f"on_missing must be 'null' or 'skip', got '{on_missing}'."
         )
+    if splits:
+        _validate_splits(splits)
     flat_features = flatten_features(features)
     _validate_feature_names(flat_features)
     for feat in flat_features:
@@ -879,34 +808,7 @@ def _load_spine(
             checkpoint_dir=_opt_str(checkpoint_dir),
             eager=True,
         )
-    if b.splits:
-        _validate_splits(b.splits, spine, lt)
     return labels_raw, spine, zero_join
-
-
-def _override_shuffle_partitions(b: _Build) -> str | None:
-    """Set this build's input-bytes-derived shuffle width (see
-    :func:`_tuned_shuffle_partitions`); returns the session value to
-    restore, or None when nothing changed.
-
-    spark.sql.shuffle.partitions is session state, visible to any query
-    planned on the session while the build runs: builds are assumed one
-    at a time per SparkSession (spark.newSession() isolates concurrent
-    builds). The transcript line makes the override auditable."""
-    tuned = _tuned_shuffle_partitions(b.spark, b.labels, b.features)
-    current = b.spark.conf.get("spark.sql.shuffle.partitions")
-    if tuned is None or not current.isdigit() or tuned == int(current):
-        return None
-    b.spark.conf.set("spark.sql.shuffle.partitions", str(tuned))
-    b.transcript.append(
-        f"-- shuffle partitions tuned {current} -> {tuned} "
-        "(input-bytes-derived: shrink for tiny builds, raise "
-        "for sort-spill avoidance on big ones; session-wide "
-        "conf for this build's duration; restored after "
-        "build — one build per SparkSession; use "
-        "spark.newSession() for concurrent builds)"
-    )
-    return current
 
 
 def _feature_table(
@@ -1191,16 +1093,20 @@ def _apply_window_dup_policy(
         _apply_dup_policy(src_df, feat, counts.get(name, 0) + counts_null.get(name, 0))
 
 
-def _write_splits(b: _Build, result: DataFrame) -> dict[str, Path] | None:
-    """Each split is a disjoint label_time filter over the sorted result
-    (persisted by the caller); the writes run as concurrent Spark actions,
-    so two splits cost about one write's wall clock."""
-    if not b.splits or not b.output:
-        return None
+def _write_splits(b: _Build, result: DataFrame) -> dict[str, Path]:
+    """Each split is a disjoint label_time filter over the committed
+    output, read back with ``result``'s schema and column order and
+    sorted like a single-file output; the writes run as concurrent Spark
+    actions, so two splits cost about one write's wall clock."""
+    written = (
+        b.spark.read.schema(result.schema)
+        .parquet(_abs(b.output))
+        .select(*result.columns)
+    )
     output_path = Path(str(b.output))
     lt = b.labels.label_time
     # label_time survives flatten unchanged: it never carries a prefix.
-    ts_type = result.schema[lt].dataType
+    ts_type = written.schema[lt].dataType
 
     def _write_split(item):
         split_name, (start, end) = item
@@ -1208,11 +1114,14 @@ def _write_splits(b: _Build, result: DataFrame) -> dict[str, Path] | None:
             output_path.parent
             / f"{output_path.stem}_{split_name}{output_path.suffix or '.parquet'}"
         )
-        split_df = result.where(
+        split_df = written.where(
             (F.col(lt) >= F.lit(start).cast(ts_type))
             & (F.col(lt) < F.lit(end).cast(ts_type))
         )
-        _write_output(split_df, split_file)
+        _write_output(
+            split_df.repartition(1).sortWithinPartitions(*b.labels.keys, lt),
+            split_file,
+        )
         return split_name, split_file
 
     with ThreadPoolExecutor(max_workers=min(4, len(b.splits))) as pool:
@@ -1225,14 +1134,21 @@ def _write_and_verify(
     tables: Sequence[tuple[Feature, DataFrame, list[str]]],
     window_dups: dict[str, tuple[DataFrame, Feature]],
 ) -> tuple[DataFrame, dict[str, Any], dict[str, Path] | None]:
-    """Phase 6: project and sort the output, run the build's ONE action —
+    """Phase 6: project and order the output, run the build's ONE action —
     the write into a staging path next to ``output`` with the stats
     observed on it, or the stats aggregation when ``output`` is None —
     then apply the in-window duplicate policy, and only then replace
     ``output`` and write the splits. A failure before the commit removes
-    the staging path and leaves an earlier output untouched. Returns
+    the staging path and leaves an earlier output untouched.
+
+    Output order by ``(*keys, label_time)``: a single-file output is one
+    partition sorted in the writing task, a directory output sorts each
+    part file, and ``output=None`` returns a lazy ``orderBy``. None of
+    them range-partitions, whose sampling pass would run the match (and
+    every observation) twice unless the result were cached. Returns
     (result, stats, split paths)."""
     lt = b.labels.label_time
+    part_cols = b.part_list or None
     aggs, skip, value_cols = _stats_aggs(b, tables)
     observation = Observation() if b.output is not None else None
     result = m.combined.observe(observation, *aggs) if observation else m.combined
@@ -1243,56 +1159,48 @@ def _write_and_verify(
         shorts = [c.split("__", 1)[1] if "__" in c else c for c in result.columns]
         if len(set(shorts)) == len(shorts):
             result = result.toDF(*shorts)
-    # The final ORDER BY range-partitions, and the range partitioner
-    # SAMPLES its child before the shuffle pass: without a cache below
-    # the sort the match would run twice per write and every observation
-    # would double-count. With splits, the sorted result is persisted
-    # too, so each split write is a cached scan and the sort runs once.
-    caches: list[DataFrame] = []
-    if b.output is not None:
-        result = result.persist()
-        caches.append(result)
-    result = result.orderBy(*b.labels.keys, lt)
-    if b.splits and b.output is not None:
-        result = result.persist()
-        caches.append(result)
+    b.emit("Writing output")
+    if part_cols:
+        if str(b.output or "").endswith((".parquet", ".pq")):
+            raise TimefenceConfigError(
+                "output_partition_by writes a partitioned parquet "
+                "directory; pass a directory path for 'output', not a "
+                f"'.parquet' file ({b.output})."
+            )
+        missing = [c for c in part_cols if c not in result.columns]
+        if missing:
+            raise TimefenceConfigError(
+                f"output_partition_by columns not in output: {missing}. "
+                f"Available: {result.columns}"
+            )
+    order = [*b.labels.keys, lt]
+    if b.output is None:
+        result = result.orderBy(*order)
+    elif _single_file(b.output, part_cols):
+        result = result.repartition(1).sortWithinPartitions(*order)
+    else:
+        # Leading partition columns satisfy the writer's required
+        # ordering, so it adds no sort of its own over this one.
+        result = result.sortWithinPartitions(*b.part_list, *order)
+    b.emit("Verifying temporal correctness")
+    staging = _staging_path(b.output) if b.output is not None else None
     try:
-        b.emit("Writing output")
-        part_cols = b.part_list or None
-        if part_cols:
-            if str(b.output or "").endswith((".parquet", ".pq")):
-                raise TimefenceConfigError(
-                    "output_partition_by writes a partitioned parquet "
-                    "directory; pass a directory path for 'output', not a "
-                    f"'.parquet' file ({b.output})."
-                )
-            missing = [c for c in part_cols if c not in result.columns]
-            if missing:
-                raise TimefenceConfigError(
-                    f"output_partition_by columns not in output: {missing}. "
-                    f"Available: {result.columns}"
-                )
-        b.emit("Verifying temporal correctness")
-        staging = _staging_path(b.output) if b.output is not None else None
-        try:
-            stats = None
-            if b.output is not None:
-                _stage_output(result, b.output, staging, part_cols)
-                stats = _observation_get(observation)
-            if stats is None:
-                # output=None, or the optimizer removed the CollectMetrics
-                # node (degenerate builds, which are the cheap ones).
-                stats = m.combined.agg(*aggs).first().asDict()
-            _apply_window_dup_policy(m, window_dups)
-        except BaseException:
-            _remove_path(staging)
-            raise
+        stats = None
         if b.output is not None:
-            _commit_output(staging, b.output, part_cols)
-        return result, stats, _write_splits(b, result)
-    finally:
-        for cache in reversed(caches):
-            cache.unpersist()
+            _stage_output(result, b.output, staging, part_cols)
+            stats = _observation_get(observation)
+        if stats is None:
+            # output=None, or the optimizer removed the CollectMetrics
+            # node (degenerate builds, which are the cheap ones).
+            stats = m.combined.agg(*aggs).first().asDict()
+        _apply_window_dup_policy(m, window_dups)
+    except BaseException:
+        _remove_path(staging)
+        raise
+    if b.output is None:
+        return result, stats, None
+    _commit_output(staging, b.output, part_cols)
+    return result, stats, _write_splits(b, result) if b.splits else None
 
 
 def _build_result(
@@ -1306,6 +1214,8 @@ def _build_result(
     """Phase 7: stats, the manifest (saved to the store when one is
     attached) and the BuildResult."""
     lt = b.labels.label_time
+    if b.splits:
+        _warn_split_coverage(b.splits, stats_map["__mn"], stats_map["__mx"])
     label_count = int(stats_map["__n_labels"])
     result_count = int(stats_map["__n_result"])
     feature_stats: dict[str, dict[str, Any]] = {}
@@ -1438,7 +1348,12 @@ def build(
     duplicate checks and feature tables → match → write, observe and
     verify → manifest. The output is written to a staging path next to
     ``output`` and renamed into place only after every check passed, so a
-    failed build leaves an earlier output intact. Spark extras: ``spark``
+    failed build leaves an earlier output intact. Rows are ordered by
+    ``(*keys, label_time)``: a ``.parquet``/``.pq`` output is one file
+    sorted throughout (as are split files), a directory output is sorted
+    within each part file only, and with ``output=None``
+    ``BuildResult.dataframe`` is a lazy ``orderBy``. The build never
+    changes the session's shuffle width. Spark extras: ``spark``
     (session), ``strategy`` ('auto' | 'join' | 'union' as-of plan
     selection; 'auto' is 'union', and 'join' broadcasts a feature table
     whose Catalyst size estimate is small), ``output_partition_by`` (write
@@ -1474,32 +1389,24 @@ def build(
     if cached is not None:
         return cached
     labels_raw, spine, zero_join = _load_spine(b, checkpoint_dir)
-    saved_shuffle_conf = _override_shuffle_partitions(b)
-    try:
-        tables, window_dups = _feature_tables(b, labels_raw)
-        m = _match(
-            spine,
-            tables,
-            b.labels.keys,
-            b.labels.label_time,
-            lookback_s=duration_seconds(b.lookback_td),
-            staleness_s=duration_seconds(b.staleness_td),
-            strict=b.join == "strict",
-            zero_join=zero_join,
-            strategy=b.strategy,
-            bucket_s=b.skew_bucket_s,
-            dup_track=window_dups,
-            emit=b.emit,
-        )
-        b.transcript.append(m.transcript)
-        result, stats_map, split_paths = _write_and_verify(b, m, tables, window_dups)
-        return _build_result(b, result, stats_map, split_paths, tables, m.plans)
-    finally:
-        if saved_shuffle_conf is not None:
-            b.spark.conf.set("spark.sql.shuffle.partitions", saved_shuffle_conf)
-        # localCheckpoint blocks are freed by the ContextCleaner once the
-        # spine is garbage-collected; unpersist() does not apply to them.
-        del spine
+    tables, window_dups = _feature_tables(b, labels_raw)
+    m = _match(
+        spine,
+        tables,
+        b.labels.keys,
+        b.labels.label_time,
+        lookback_s=duration_seconds(b.lookback_td),
+        staleness_s=duration_seconds(b.staleness_td),
+        strict=b.join == "strict",
+        zero_join=zero_join,
+        strategy=b.strategy,
+        bucket_s=b.skew_bucket_s,
+        dup_track=window_dups,
+        emit=b.emit,
+    )
+    b.transcript.append(m.transcript)
+    result, stats_map, split_paths = _write_and_verify(b, m, tables, window_dups)
+    return _build_result(b, result, stats_map, split_paths, tables, m.plans)
 
 
 # ---------------------------------------------------------------------------
